@@ -1,5 +1,5 @@
 """Whole-PDF-file layer: raw ``%PDF-...%%EOF`` bytes -> decoded
-per-page content streams -> the existing tokenize/layout/span chain.
+per-page content streams -> the tokenize/layout/span chain.
 
 The reference consumes whole PDF files through pdfplumber
 (`text_extractor.pyc:54-66` opens the file; pdfminer's pdfparser /
@@ -54,9 +54,9 @@ Scale shape (100 TB of PDFs): ``pages_from_files`` is ONE ``mapInArrow``
 pass — map-only, zero shuffle, linear in file bytes; each file is
 parsed independently so 1000 executors scale trivially.  A file is one
 row (same single-row-bounded contract as the HTML page scan — cap file
-bytes at ingest); page explosion happens INSIDE the kernel so the
-downstream layout shuffle keys on (doc_id, page) and the giant-PDF
-skew unit is a page, not a document.  Parsing is lazy per object —
+bytes at ingest), so the skew unit is the file for the parse AND for
+``files_to_spans``, which tokenizes and lays out each page inside the
+same pass (zero exchanges).  Parsing is lazy per object —
 only the xref, catalog, page tree, and content streams are touched;
 fonts/images referenced but never loaded cost nothing.
 """
@@ -2502,155 +2502,133 @@ META_SCHEMA = ("doc_id string, n_pages int, n_objects int, "
 
 
 def build_pdf_files(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """(doc_id, text) -> (doc_id, pdf binary) via the deterministic
-    writer — ONE map-only Arrow pass (test-corpus synthesis; at
-    production scale the binary column arrives from the lake)."""
-    import pyarrow as pa
+                    text_col: str = "text", writer=None) -> DataFrame:
+    """(doc_id, text) -> (doc_id, pdf binary) via a deterministic
+    writer (``writer(int(doc_id), text)``, default :func:`build_pdf`)
+    — ONE map-only Arrow pass (test-corpus synthesis; at production
+    scale the binary column arrives from the lake)."""
+    writer = writer or build_pdf
+    return map_files(docs, text_col, id_col, "doc_id string, pdf binary",
+                     lambda i, t: [(writer(int(i), t or ""),)])
 
-    schema = pa.schema([("doc_id", pa.string()), ("pdf", pa.binary())])
 
-    def _build(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
+def _enc_fonts(fm: dict) -> dict:
+    def one(e):
+        if not e:
+            return None
+        d = {"w": e[1], "m": {str(k): v for k, v in e[0].items()}}
+        if len(e) > 2 and e[2] is not None:
+            d["gw"] = {str(k): v for k, v in e[2].items()}
+            d["dw"] = e[3]
+        return d
+    return {name: one(e) for name, e in fm.items()}
+
+
+def _enc_form(spec: dict) -> dict:
+    d: dict = {"t": spec["text"]}
+    if "mtx" in spec:
+        d["x"] = spec["mtx"]
+    if "fonts" in spec:
+        d["f"] = _enc_fonts(spec["fonts"])
+    if "forms" in spec:
+        d["s"] = {n: _enc_form(s) for n, s in spec["forms"].items()}
+    return d
+
+
+def page_payload(blob: bytes | None) -> list[tuple[str, str]]:
+    """Parse one file -> ``(content stream, font/form payload JSON)``
+    per page, in page order — the per-page unit both
+    :func:`pages_from_files` and :func:`files_to_spans` consume.  The
+    payload is the page's ToUnicode/width maps as ``{font: {"w": width,
+    "m": {code: text}, "gw"?: widths, "dw"?: default}}`` plus its Form
+    XObjects under the reserved ``"__forms__"`` key, ``{}`` when the
+    page has neither; `pdfstream.decode_page_payload` reads it back.
+    Raises whatever the parse raises."""
+    import json
+
+    pf = PdfFile(blob or b"")
+    texts = pf.page_texts()
+    fmaps = pf.page_font_maps()
+    forms = pf.page_forms()
+    out = []
+    for pg, txt in enumerate(texts):
+        payload = _enc_fonts(fmaps[pg] if pg < len(fmaps) else {})
+        fo = forms[pg] if pg < len(forms) else {}
+        if fo:
+            payload["__forms__"] = {n: _enc_form(s) for n, s in fo.items()}
+        out.append((txt, json.dumps(payload, sort_keys=True)
+                    if payload else "{}"))
+    return out
+
+
+def map_files(files: DataFrame, value_col: str, id_col: str,
+              schema: str, rows_of, strict: bool = True) -> DataFrame:
+    """ONE map-only ``mapInArrow`` pass over (doc_id, value) rows — file
+    bytes, or text to write a file from: each row's ``rows_of(doc_id,
+    value)`` tuples come out prefixed by its doc_id (cast to string) —
+    zero shuffle, each file handled independently.
+    ``strict=False`` drops a file whose ``rows_of`` raises (e.g. an
+    unsupported content filter) instead of failing the task: at
+    10^9-file scale one poisoned blob must cost one row, not the job.
+    ``strict=True`` propagates, for pipelines that would rather fail
+    loudly."""
+    from .layout import arrow_batch, arrow_schema
+
+    out = arrow_schema(schema)
+
+    def run(batches: Iterator["pa.RecordBatch"]
+            ) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            pdfs = [build_pdf(int(i), t or "")
-                    for i, t in zip(ids, texts)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array(pdfs, type=pa.binary())], schema=schema)
+            rows: list[tuple] = []
+            for doc_id, blob in zip(batch.column(0).to_pylist(),
+                                    batch.column(1).to_pylist()):
+                try:
+                    got = rows_of(doc_id, blob)
+                except Exception:
+                    if strict:
+                        raise
+                    continue
+                rows += [(doc_id, *r) for r in got]
+            yield arrow_batch(rows, out)
 
-    sel = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                      F.col(text_col).alias("text"))
-    return sel.mapInArrow(_build, schema="doc_id string, pdf binary")
+    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
+                       F.col(value_col))
+    return sel.mapInArrow(run, schema=schema)
 
 
 def pages_from_files(files: DataFrame, bytes_col: str = "pdf",
                      id_col: str = "doc_id",
                      strict: bool = False) -> DataFrame:
-    """Whole-file parse: (doc_id, pdf bytes) -> (doc_id, page, stream)
-    — xref walk, filter decode, page-tree DFS, one map-only
-    ``mapInArrow`` pass (zero shuffle, plan-asserted).
+    """Whole-file parse: (doc_id, pdf bytes) -> (doc_id, page, stream,
+    fontmaps) — xref walk, filter decode, page-tree DFS, one map-only
+    ``mapInArrow`` pass (zero shuffle, plan-asserted; ``strict`` as in
+    :func:`map_files`, default False: the corpus default drops a
+    poisoned file).
 
-    ``strict=False`` (the corpus default) drops files whose parse
-    raises (e.g. an unsupported content filter) instead of failing the
-    task: at 10^9-file scale one poisoned blob must cost one row, not
-    the job.  ``strict=True`` propagates, for pipelines that would
-    rather fail loudly.
-
-    The ``fontmaps`` column carries each page's ToUnicode CMaps as
-    JSON (``{font: {"w": width, "m": {code: text}}}``, ``{}`` when the
-    page's fonts carry none) — `pdfstream.tokenize_streams(maps_col=
-    'fontmaps')` applies them so glyph-coded strings decode to
-    text."""
-    import json as _json
-
-    import pyarrow as pa
-
-    schema = pa.schema([("doc_id", pa.string()), ("page", pa.int32()),
-                        ("stream", pa.string()),
-                        ("fontmaps", pa.string())])
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            o_id, o_pg, o_st, o_fm = [], [], [], []
-            def enc_fonts(fm: dict) -> dict:
-                def one(e):
-                    if not e:
-                        return None
-                    d = {"w": e[1],
-                         "m": {str(k): v for k, v in e[0].items()}}
-                    if len(e) > 2 and e[2] is not None:
-                        d["gw"] = {str(k): v for k, v in e[2].items()}
-                        d["dw"] = e[3]
-                    return d
-                return {name: one(e) for name, e in fm.items()}
-
-            def enc_form(spec: dict) -> dict:
-                d: dict = {"t": spec["text"]}
-                if "mtx" in spec:
-                    d["x"] = spec["mtx"]
-                if "fonts" in spec:
-                    d["f"] = enc_fonts(spec["fonts"])
-                if "forms" in spec:
-                    d["s"] = {n: enc_form(s)
-                              for n, s in spec["forms"].items()}
-                return d
-
-            for doc_id, blob in zip(ids, blobs):
-                try:
-                    pf = PdfFile(blob or b"")
-                    texts = pf.page_texts()
-                    fmaps = pf.page_font_maps()
-                    forms = pf.page_forms()
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for pg, txt in enumerate(texts):
-                    o_id.append(doc_id)
-                    o_pg.append(pg)
-                    o_st.append(txt)
-                    payload = enc_fonts(
-                        fmaps[pg] if pg < len(fmaps) else {})
-                    fo = forms[pg] if pg < len(forms) else {}
-                    if fo:  # reserved key the tokenizer splits off
-                        payload["__forms__"] = {
-                            n: enc_form(s) for n, s in fo.items()}
-                    o_fm.append(_json.dumps(payload, sort_keys=True)
-                                if payload else "{}")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, type=pa.string()),
-                 pa.array(o_pg, type=pa.int32()),
-                 pa.array(o_st, type=pa.string()),
-                 pa.array(o_fm, type=pa.string())], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(_parse, schema=PAGES_SCHEMA)
+    The ``fontmaps`` column carries each page's ToUnicode CMaps and
+    Form XObjects as JSON (:func:`page_payload`) —
+    `pdfstream.tokenize_streams(maps_col='fontmaps')` applies them so
+    glyph-coded strings decode to text."""
+    return map_files(
+        files, bytes_col, id_col, PAGES_SCHEMA,
+        lambda _, b: [(pg, *p) for pg, p in enumerate(page_payload(b))],
+        strict)
 
 
 def file_meta(files: DataFrame, bytes_col: str = "pdf",
               id_col: str = "doc_id") -> DataFrame:
     """Structural metadata per file: page/object/revision counts, xref
     flavor, /Info title (post-update), page-1 content filter."""
-    import pyarrow as pa
+    def meta(_, blob: bytes | None) -> list[tuple]:
+        pf = PdfFile(blob or b"")
+        streams = pf.page_streams()
+        f1 = streams[0][0] if streams else []
+        return [(len(streams), int(pf.get(pf.trailer.get("Size")) or 0),
+                 pf.xref_kind, pf.n_revisions,
+                 text_string(pf.info().get("Title", "")),
+                 f1[0] if f1 else "none")]
 
-    fields = [("doc_id", pa.string()), ("n_pages", pa.int32()),
-              ("n_objects", pa.int32()), ("xref_kind", pa.string()),
-              ("n_revisions", pa.int32()), ("title", pa.string()),
-              ("page1_filter", pa.string())]
-    schema = pa.schema(fields)
-
-    def _meta(batches: Iterator["pa.RecordBatch"]
-              ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            cols: list[list] = [[] for _ in fields]
-            for doc_id, blob in zip(ids, blobs):
-                pf = PdfFile(blob or b"")
-                streams = pf.page_streams()
-                f1 = streams[0][0] if streams else []
-                cols[0].append(doc_id)
-                cols[1].append(len(streams))
-                cols[2].append(int(pf.get(pf.trailer.get("Size")) or 0))
-                cols[3].append(pf.xref_kind)
-                cols[4].append(pf.n_revisions)
-                cols[5].append(text_string(
-                    pf.info().get("Title", "")))
-                cols[6].append(f1[0] if f1 else "none")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t) for c, (_, t) in zip(cols, fields)],
-                schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(_meta, schema=META_SCHEMA)
+    return map_files(files, bytes_col, id_col, META_SCHEMA, meta)
 
 
 def outline_table(files: DataFrame, bytes_col: str = "pdf",
@@ -2659,41 +2637,12 @@ def outline_table(files: DataFrame, bytes_col: str = "pdf",
     """(doc_id, pdf) -> flattened bookmark rows (doc_id, ord, depth,
     title, page) in display order — map-only; the document-structure
     side channel sectioning can join against the layout blocks."""
-    import pyarrow as pa
-
-    fields = [("doc_id", pa.string()), ("ord", pa.int32()),
-              ("depth", pa.int32()), ("title", pa.string()),
-              ("page", pa.int32())]
-    schema = pa.schema(fields)
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            cols: list[list] = [[] for _ in fields]
-            for doc_id, blob in zip(ids, blobs):
-                try:
-                    rows = PdfFile(blob or b"").outlines()
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for k, (depth, title, page) in enumerate(rows):
-                    cols[0].append(doc_id)
-                    cols[1].append(k)
-                    cols[2].append(depth)
-                    cols[3].append(title)
-                    cols[4].append(page)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t)
-                 for c, (_, t) in zip(cols, fields)], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(
-        _parse, schema="doc_id string, ord int, depth int, "
-                       "title string, page int")
+    return map_files(
+        files, bytes_col, id_col,
+        "doc_id string, ord int, depth int, title string, page int",
+        lambda _, b: [(k, *r) for k, r in
+                      enumerate(PdfFile(b or b"").outlines())],
+        strict)
 
 
 def pdf_link_table(files: DataFrame, bytes_col: str = "pdf",
@@ -2702,37 +2651,10 @@ def pdf_link_table(files: DataFrame, bytes_col: str = "pdf",
     """(doc_id, pdf) -> (doc_id, page, uri) for /Link//URI annotations
     — map-only; feeds the crawl-curation link chain
     (`operators/links.py` url_parts / host_stats) unchanged."""
-    import pyarrow as pa
-
-    schema = pa.schema([("doc_id", pa.string()), ("page", pa.int32()),
-                        ("uri", pa.string())])
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            o_id, o_pg, o_uri = [], [], []
-            for doc_id, blob in zip(ids, blobs):
-                try:
-                    rows = PdfFile(blob or b"").link_annotations()
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for page, uri in rows:
-                    o_id.append(doc_id)
-                    o_pg.append(page)
-                    o_uri.append(uri)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, type=pa.string()),
-                 pa.array(o_pg, type=pa.int32()),
-                 pa.array(o_uri, type=pa.string())], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(_parse,
-                          schema="doc_id string, page int, uri string")
+    return map_files(files, bytes_col, id_col,
+                     "doc_id string, page int, uri string",
+                     lambda _, b: PdfFile(b or b"").link_annotations(),
+                     strict)
 
 
 def annot_table(files: DataFrame, bytes_col: str = "pdf",
@@ -2741,41 +2663,10 @@ def annot_table(files: DataFrame, bytes_col: str = "pdf",
     """(doc_id, pdf) -> (doc_id, page, subtype, contents) for every
     text-carrying annotation — map-only; reviewer markup becomes
     corpus rows alongside the extracted spans."""
-    import pyarrow as pa
-
-    schema = pa.schema([("doc_id", pa.string()), ("page", pa.int32()),
-                        ("subtype", pa.string()),
-                        ("contents", pa.string())])
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            o_id, o_pg, o_sub, o_txt = [], [], [], []
-            for doc_id, blob in zip(ids, blobs):
-                try:
-                    rows = PdfFile(blob or b"").annotation_texts()
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for page, sub, txt in rows:
-                    o_id.append(doc_id)
-                    o_pg.append(page)
-                    o_sub.append(sub)
-                    o_txt.append(txt)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, type=pa.string()),
-                 pa.array(o_pg, type=pa.int32()),
-                 pa.array(o_sub, type=pa.string()),
-                 pa.array(o_txt, type=pa.string())], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(
-        _parse, schema="doc_id string, page int, subtype string, "
-                       "contents string")
+    return map_files(
+        files, bytes_col, id_col,
+        "doc_id string, page int, subtype string, contents string",
+        lambda _, b: PdfFile(b or b"").annotation_texts(), strict)
 
 
 def acroform_table(files: DataFrame, bytes_col: str = "pdf",
@@ -2785,57 +2676,53 @@ def acroform_table(files: DataFrame, bytes_col: str = "pdf",
     terminal /AcroForm field — map-only; filled form values become
     queryable corpus rows the enrichment plans can consume like any
     other extracted attribute."""
-    import pyarrow as pa
-
-    fields = [("doc_id", pa.string()), ("ord", pa.int32()),
-              ("name", pa.string()), ("ftype", pa.string()),
-              ("value", pa.string())]
-    schema = pa.schema(fields)
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            cols: list[list] = [[] for _ in fields]
-            for doc_id, blob in zip(ids, blobs):
-                try:
-                    rows = PdfFile(blob or b"").form_fields()
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for k, (name, ftype, value) in enumerate(rows):
-                    cols[0].append(doc_id)
-                    cols[1].append(k)
-                    cols[2].append(name)
-                    cols[3].append(ftype)
-                    cols[4].append(value)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t)
-                 for c, (_, t) in zip(cols, fields)], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(
-        _parse, schema="doc_id string, ord int, name string, "
-                       "ftype string, value string")
+    return map_files(
+        files, bytes_col, id_col,
+        "doc_id string, ord int, name string, ftype string, value string",
+        lambda _, b: [(k, *r) for k, r in
+                      enumerate(PdfFile(b or b"").form_fields())],
+        strict)
 
 
 def files_to_spans(files: DataFrame, bytes_col: str = "pdf",
-                   id_col: str = "doc_id", **kw) -> DataFrame:
-    """Whole PDF files -> contract span arrays: parse (map-only) ->
-    per-page tokenize/layout -> page-ordered gapless spans.  The
-    composition point for the BASELINE.json input_hint on raw-file
-    corpora; all downstream plans (`plans/fused.py`) run unchanged.
-    ToUnicode CMaps ride along by default (`maps_col='fontmaps'`), so
-    glyph-coded strings from embedded fonts decode to text."""
-    from .pdfstream import pdf_to_spans
+                   id_col: str = "doc_id", page_height: float = 792.0,
+                   drop_artifacts: bool = False,
+                   with_fonts: bool = False, y_tol: float = 3.0,
+                   gap_tol: float = 10.0,
+                   space_frac: float | None = 0.3,
+                   detect_tables: bool = False, col_gap: float = 18.0,
+                   col_tol: float = 6.0) -> DataFrame:
+    """Whole PDF files -> contract span arrays: parse -> per-page
+    tokenize -> per-page layout (`layout.page_units`) -> page-ordered
+    gapless spans, fused into ONE map-only ``mapInArrow`` pass with
+    zero exchanges (plan-asserted): a file arrives whole in its row,
+    so the skew unit is the file, as it already is for the parse.
+    The composition point for the BASELINE.json input_hint on
+    raw-file corpora; all downstream plans (`plans/fused.py`) run
+    unchanged.  ToUnicode CMaps, /Widths and Form XObjects ride along
+    (:func:`page_payload`), so glyph-coded strings from embedded fonts
+    decode to text.
 
-    pages = pages_from_files(files, bytes_col, id_col)
-    kw.setdefault("maps_col", "fontmaps")
-    return pdf_to_spans(pages, stream_col="stream", id_col="doc_id",
-                        page_col="page", **kw)
+    Contract: ONE output row per input file, its ``doc_id`` carried
+    through verbatim (NULL, repeated or separator-bearing ids stay
+    distinct rows); a file without text or media yields an empty span
+    array; a file whose parse raises is dropped, as in
+    :func:`pages_from_files`.  The keywords mean what they mean in
+    `pdfstream.pdf_to_spans`."""
+    from .pdfstream import doc_spans, spans_schema
+
+    layout = dict(y_tol=y_tol, gap_tol=gap_tol, space_frac=space_frac,
+                  detect_tables=detect_tables, col_gap=col_gap,
+                  col_tol=col_tol)
+    memo: dict = {}
+
+    def spans(_, blob: bytes | None) -> list[tuple]:
+        pages = [[p] for p in page_payload(blob)]
+        return [(doc_spans(pages, memo, page_height, drop_artifacts,
+                           with_fonts, **layout),)]
+
+    return map_files(files, bytes_col, id_col, spans_schema(with_fonts),
+                     spans, strict=False)
 
 
 def files_to_ruled_tables(files: DataFrame, bytes_col: str = "pdf",
@@ -2846,11 +2733,10 @@ def files_to_ruled_tables(files: DataFrame, bytes_col: str = "pdf",
     detect_ruled_tables` — the pdfplumber-default 'lines' table
     strategy (the reference's ``page.extract_tables()``,
     `src/table_extractor.py:9-56`) over raw file corpora.  Each page
-    detects in its OWN coordinate space (the composed doc||page key,
-    same skew story as `files_to_spans`); the output re-splits the
-    key, so tables number top-down per page.  Embedded-font CMaps
-    ride along, so glyph-coded cell text decodes before it lands in
-    cells.  ``kw`` forwards to the detector.
+    detects in its OWN coordinate space (grouped on the (doc_id, page)
+    columns), so tables number top-down per page.  Embedded-font
+    CMaps ride along, so glyph-coded cell text decodes before it lands
+    in cells.  ``kw`` forwards to the detector.
 
     Returns (doc_id, page, tbl_idx, row_idx, n_rows, n_cols,
     table_text); feed through `tables.ruled_rows_as_spans` ->
@@ -2859,15 +2745,5 @@ def files_to_ruled_tables(files: DataFrame, bytes_col: str = "pdf",
     table numbering matters)."""
     from .pdfstream import ruled_table_rows
 
-    _SEP = "\x1f"
-    pages = pages_from_files(files, bytes_col, id_col)
-    keyed = pages.select(
-        F.concat_ws(_SEP, F.col("doc_id"),
-                    F.col("page").cast("string")).alias("doc_id"),
-        "stream", "fontmaps")
-    rows = ruled_table_rows(keyed, maps_col="fontmaps", **kw)
-    return rows.select(
-        F.substring_index("doc_id", _SEP, 1).alias("doc_id"),
-        F.substring_index("doc_id", _SEP, -1).cast("int")
-        .alias("page"),
-        "tbl_idx", "row_idx", "n_rows", "n_cols", "table_text")
+    return ruled_table_rows(pages_from_files(files, bytes_col, id_col),
+                            maps_col="fontmaps", page_col="page", **kw)

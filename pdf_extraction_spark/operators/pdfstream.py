@@ -17,10 +17,14 @@ runs -> lines -> blocks -> spans chain as every other source
 Shape:
 
   streams(doc_id, stream)
-    --mapInArrow(_tokenize_batches)-->            # ONE map-only pass
+    --tokenize_streams: mapInArrow-->             # ONE map-only pass
   runs(doc_id, run_idx, kind, text, media_ref, font, size, x, y, w, h)
     --runs_for_layout-->  layout-schema runs (y-down, x0/y0/x1/y1)
-    --layout.spans_from_runs-->  contract spans (kind,text,media_ref,offset)
+
+  streams(doc_id[, page], stream)
+    --pdf_to_spans: ONE doc_id exchange, then one mapInArrow pass per
+      document: tokenize -> doc_spans -> layout.page_units-->
+  contract spans (doc_id, spans array<kind,text,media_ref,offset>)
 
 Supported operators (the text-positioning subset every real-world
 writer emits): ``BT ET Tf Td TD Tm T* TL Tc Tw Tz Tj TJ ' "`` plus
@@ -46,22 +50,26 @@ heuristic.  The layout stage clusters on origins and tolerances, so
 block/line structure is insensitive to the approximation; a metrics
 table can be plugged in via ``char_width``.
 
-Scale shape (100 TB / 10^12 docs): the kernel is ONE ``mapInArrow``
+Scale shape (100 TB / 10^12 docs): tokenization is ONE ``mapInArrow``
 pass — map-only, zero shuffle, linear in stream bytes; 1000 executors
 scale trivially.  A giant page is one row (same single-row-bounded
-contract as ``operators/html.py`` — cap page bytes at ingest); the
-downstream layout shuffle keys on doc_id and is the first exchange in
-the whole plan.  Lexing is a single compiled-regex scan (C speed) per
-stream; only the operator dispatch loop is per-token Python, bounded
-by token count, Arrow-batched on both edges.
+contract as ``operators/html.py`` — cap page bytes at ingest).
+``pdf_to_spans`` adds exactly one exchange, on doc_id, of the STREAM
+rows (a document's pages may arrive in different partitions), and
+then lays each document out in the same Python pass that tokenizes
+it; whole-file corpora skip that exchange too
+(``pdffile.files_to_spans``).  Lexing is a single compiled-regex scan
+(C speed) per stream; only the operator dispatch loop is per-token
+Python, bounded by token count, Arrow-batched on both edges.
 """
 
 from __future__ import annotations
 
 import re
+from itertools import groupby
 from typing import Any, Iterator
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # ---------------------------------------------------------------- lexer
 
@@ -655,12 +663,56 @@ RUNS_SCHEMA = (
     "x double, y double, w double, h double")
 
 
+def _decode_fonts(d: dict) -> dict:
+    def one(spec):
+        if not spec:
+            return None
+        entry = ({int(k): v for k, v in spec["m"].items()},
+                 int(spec["w"]))
+        if "gw" in spec:
+            entry += ({int(k): float(v) for k, v in spec["gw"].items()},
+                      float(spec.get("dw", 0.0)))
+        return entry
+    return {name: one(spec) for name, spec in d.items()}
+
+
+def _decode_form(spec: dict) -> dict:
+    out: dict = {"text": spec.get("t") or ""}
+    if spec.get("x"):
+        out["mtx"] = tuple(spec["x"])
+    if "f" in spec:
+        out["fonts"] = _decode_fonts(spec["f"])
+    if "s" in spec:
+        out["forms"] = {n: _decode_form(s) for n, s in spec["s"].items()}
+    return out
+
+
+def decode_page_payload(js: str | None, memo: dict) -> tuple:
+    """A page's font/form payload JSON (the ``fontmaps`` column of
+    `pdffile.pages_from_files`, written by `pdffile.page_payload`) ->
+    the ``(font_maps, forms)`` pair :func:`machine_runs` takes.
+    Identical payloads decode once per ``memo`` (documents sharing
+    embedded fonts are the common case)."""
+    import json
+
+    if not js or js == "{}":
+        return (None, None)
+    if js not in memo:
+        d = json.loads(js)
+        fspecs = d.pop("__forms__", None)
+        memo[js] = (_decode_fonts(d) if d else None,
+                    {n: _decode_form(s) for n, s in fspecs.items()}
+                    if fspecs else None)
+    return memo[js]
+
+
 def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
                      id_col: str = "doc_id",
                      char_width: float = DEFAULT_CHAR_WIDTH,
                      maps_col: str | None = None,
                      with_rules: bool = False,
-                     drop_artifacts: bool = False) -> DataFrame:
+                     drop_artifacts: bool = False,
+                     page_col: str | None = None) -> DataFrame:
     """Batched byte-stream tokenization: (doc_id, stream) -> exploded
     positioned runs, ONE map-only ``mapInArrow`` pass (Arrow batches on
     both edges, no shuffle — the plan-shape test asserts zero
@@ -673,9 +725,8 @@ def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
     key ``"__forms__"`` carries Form-XObject specs for the same page
     (``{name: {"t": content, "x": [6 matrix nums]?, "f": {fonts}?,
     "s": {nested forms}?}}``) — ``Do`` on those names executes the
-    form content in place instead of emitting a media run.  Identical
-    JSON payloads deserialize once per batch (documents sharing
-    embedded fonts are the common case).
+    form content in place instead of emitting a media run (see
+    :func:`decode_page_payload`).
 
     ``with_rules=True`` interleaves painted axis-aligned path
     segments as ``kind='rule'`` rows (see :func:`machine_runs`) for
@@ -684,107 +735,117 @@ def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
     unless the consumer is rulings-aware
     (`layout.detect_ruled_tables`).  ``drop_artifacts=True``
     suppresses §14.8 /Artifact-tagged content (pagination chrome) —
-    see :func:`machine_runs`."""
-    import json as _json
+    see :func:`machine_runs`.  ``page_col`` carries a page-number
+    column through as ``page`` (int, after ``doc_id``)."""
+    from .layout import arrow_batch, arrow_schema
 
-    import pyarrow as pa
-
-    fields = [("doc_id", pa.string()), ("run_idx", pa.int32()),
-              ("kind", pa.string()), ("text", pa.string()),
-              ("media_ref", pa.string()), ("font", pa.string()),
-              ("size", pa.float64()), ("x", pa.float64()),
-              ("y", pa.float64()), ("w", pa.float64()),
-              ("h", pa.float64())]
-    out_schema = pa.schema(fields)
-
-    def _decode_fonts(d: dict) -> dict:
-        def one(spec):
-            if not spec:
-                return None
-            entry = ({int(k): v for k, v in spec["m"].items()},
-                     int(spec["w"]))
-            if "gw" in spec:
-                entry += ({int(k): float(v)
-                           for k, v in spec["gw"].items()},
-                          float(spec.get("dw", 0.0)))
-            return entry
-        return {name: one(spec) for name, spec in d.items()}
-
-    def _decode_form(spec: dict) -> dict:
-        out: dict = {"text": spec.get("t") or ""}
-        if spec.get("x"):
-            out["mtx"] = tuple(spec["x"])
-        if "f" in spec:
-            out["fonts"] = _decode_fonts(spec["f"])
-        if "s" in spec:
-            out["forms"] = {n: _decode_form(s)
-                            for n, s in spec["s"].items()}
-        return out
-
-    def _decode_maps(js: str | None, memo: dict):
-        if not js or js == "{}":
-            return (None, None)
-        if js not in memo:
-            d = _json.loads(js)
-            fspecs = d.pop("__forms__", None)
-            memo[js] = (_decode_fonts(d) if d else None,
-                        {n: _decode_form(s) for n, s in fspecs.items()}
-                        if fspecs else None)
-        return memo[js]
+    schema = RUNS_SCHEMA if page_col is None else RUNS_SCHEMA.replace(
+        "doc_id string, ", "doc_id string, page int, ")
+    out_schema = arrow_schema(schema)
+    lead = 1 if page_col is None else 2
 
     def _tokenize_batches(batches: Iterator["pa.RecordBatch"]
                           ) -> Iterator["pa.RecordBatch"]:
         memo: dict = {}
         for batch in batches:
-            ids = batch.column(0).to_pylist()
-            streams = batch.column(1).to_pylist()
-            maps_js = (batch.column(2).to_pylist() if maps_col
-                       else [None] * len(ids))
-            cols: list[list] = [[] for _ in fields]
-            for doc_id, stream, js in zip(ids, streams, maps_js):
-                fmaps, forms = _decode_maps(js, memo)
-                for idx, run in enumerate(
-                        extract_runs(stream or "", char_width,
-                                     fmaps, forms,
-                                     with_rules=with_rules,
-                                     drop_artifacts=drop_artifacts)):
-                    cols[0].append(doc_id)
-                    cols[1].append(idx)
-                    for j, v in enumerate(run, start=2):
-                        cols[j].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t) for c, (_, t) in zip(cols, fields)],
-                schema=out_schema)
+            keys = zip(*(batch.column(i).to_pylist() for i in range(lead)))
+            streams = batch.column(lead).to_pylist()
+            maps_js = (batch.column(lead + 1).to_pylist() if maps_col
+                       else [None] * len(streams))
+            rows: list[tuple] = []
+            for key, stream, js in zip(keys, streams, maps_js):
+                fmaps, forms = decode_page_payload(js, memo)
+                rows += [(*key, idx, *run) for idx, run in enumerate(
+                    extract_runs(stream or "", char_width, fmaps, forms,
+                                 with_rules=with_rules,
+                                 drop_artifacts=drop_artifacts))]
+            yield arrow_batch(rows, out_schema)
 
-    sel_cols = [F.col(id_col).cast("string").alias("doc_id"),
-                F.col(stream_col).alias("stream")]
+    sel_cols = [F.col(id_col).cast("string").alias("doc_id")]
+    if page_col is not None:
+        sel_cols.append(F.col(page_col).cast("int").alias("page"))
+    sel_cols.append(F.col(stream_col).alias("stream"))
     if maps_col:
         sel_cols.append(F.col(maps_col).alias("fontmaps"))
-    sel = docs.select(*sel_cols)
-    return sel.mapInArrow(_tokenize_batches, schema=RUNS_SCHEMA)
+    return docs.select(*sel_cols).mapInArrow(_tokenize_batches,
+                                             schema=schema)
+
+
+def layout_run(run: tuple, page_height: float = 792.0) -> tuple:
+    """One device-space run (y-up, PDF user space) ``(kind, text,
+    media_ref, font, size, x, y, w, h)`` -> the layout operators' y-down
+    run ``(text, x0, y0, x1, y1, size, font, media_ref)``: top =
+    page_height - y - h, bottom = page_height - y
+    (`operators/layout.py` input contract).  ``media_ref`` is kept on
+    media runs only; their box is the CTM-placed unit square."""
+    kind, text, ref, font, size, x, y, w, h = run
+    return (text, x, page_height - y - h, x + w, page_height - y, size,
+            font, ref if kind == "media" else None)
 
 
 def runs_for_layout(runs: DataFrame,
                     page_height: float = 792.0) -> DataFrame:
-    """Convert device-space runs (y-up, PDF user space) to the layout
-    operators' y-down schema: top = page_height - y - h, bottom =
-    page_height - y (`operators/layout.py` input contract).  Media runs
-    keep their media_ref; their box is the CTM-placed unit square.
-    The font name passes through (the layout total-order key absorbs
-    it; `spans_from_runs(with_fonts=True)` forwards it as the C2
-    span attribute)."""
-    H = F.lit(page_height)
-    return runs.select(
-        "doc_id",
-        "text",
-        F.col("x").alias("x0"),
-        (H - F.col("y") - F.col("h")).alias("y0"),
-        (F.col("x") + F.col("w")).alias("x1"),
-        (H - F.col("y")).alias("y1"),
-        F.col("size"),
-        F.col("font"),
-        F.when(F.col("kind") == "media", F.col("media_ref"))
-        .alias("media_ref"))
+    """:func:`tokenize_streams` runs -> the layout operators' schema
+    ``(doc_id, text, x0, y0, x1, y1, size, font, media_ref)``, one
+    map-only pass of :func:`layout_run`.  The font name passes through
+    (the layout total-order key absorbs it;
+    `spans_from_runs(with_fonts=True)` forwards it as the C2 span
+    attribute)."""
+    from .layout import arrow_batch, arrow_schema
+
+    schema = ("doc_id string, text string, x0 double, y0 double, "
+              "x1 double, y1 double, size double, font string, "
+              "media_ref string")
+    out_schema = arrow_schema(schema)
+
+    def convert(batches: Iterator["pa.RecordBatch"]
+                ) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            yield arrow_batch(
+                [(doc_id, *layout_run(run, page_height)) for doc_id, *run
+                 in zip(*(c.to_pylist() for c in batch.columns))],
+                out_schema)
+
+    return runs.select("doc_id", "kind", "text", "media_ref", "font",
+                       "size", "x", "y", "w", "h") \
+        .mapInArrow(convert, schema=schema)
+
+
+def spans_schema(with_fonts: bool) -> str:
+    """The contract span-array schema; ``with_fonts`` appends the C2
+    ``font``/``size`` span attributes."""
+    extra = ",font:string,size:double" if with_fonts else ""
+    return ("doc_id string, spans array<struct<kind:string,text:string,"
+            f"media_ref:string,offset:int{extra}>>")
+
+
+def doc_spans(pages: list[list[tuple]], memo: dict,
+              page_height: float = 792.0, drop_artifacts: bool = False,
+              with_fonts: bool = False, **layout) -> list[tuple]:
+    """One document's pages — in page order, each a list of (content
+    stream, payload JSON) rows laid out in ONE coordinate space — ->
+    its span tuples ``(kind, text, media_ref, offset[, font, size])``:
+    per-page reading order (`layout.page_units`), offsets gapless
+    across pages, NULL text/media_ref/font rendered as ''."""
+    from .layout import page_units
+
+    out: list[tuple] = []
+    for rows in pages:
+        text, media = [], []
+        for stream, js in rows:
+            for run in extract_runs(stream or "", DEFAULT_CHAR_WIDTH,
+                                    *decode_page_payload(js, memo),
+                                    drop_artifacts=drop_artifacts):
+                run = layout_run(run, page_height)
+                if run[7] is None:
+                    text.append(run[:7])
+                else:
+                    media.append((run[2], run[1], run[7]))
+        for _, _, kind, txt, ref, font, size in page_units(
+                text, media, **layout):
+            out.append((kind, txt or "", ref or "", len(out),
+                        *((font or "", size) if with_fonts else ())))
+    return out
 
 
 def pdf_to_spans(docs: DataFrame, stream_col: str = "stream",
@@ -806,7 +867,9 @@ def pdf_to_spans(docs: DataFrame, stream_col: str = "stream",
     assemble_fused`` and everything downstream runs unchanged on raw
     content streams.
 
-    Returns (doc_id, spans array<struct<kind,text,media_ref,offset>>).
+    Returns (doc_id, spans array<struct<kind,text,media_ref,offset>>),
+    one row per doc_id that yields at least one span (rows sharing a
+    doc_id are one document; NULL doc_ids group together).
     ``with_fonts=True`` appends the optional C2 attributes ``font``
     (block dominant font name) and ``size`` (block max size) to each
     span struct — ``plans/extraction.py explode_spans`` then derives
@@ -836,83 +899,51 @@ def pdf_to_spans(docs: DataFrame, stream_col: str = "stream",
     blocks heuristically, tagged PDFs declare theirs, so the tagged
     path is exact.  Untagged corpora are unaffected (no BDC scopes).
 
-    ``page_col`` names an optional page-number column for corpora that
-    arrive one content stream per PAGE (real PDFs): each page is
-    layout-clustered in its OWN coordinate space (page 2's y=700 must
-    not interleave with page 1's), spans are ordered (page, reading
-    order) and re-offset gaplessly per document.  This is also the
-    documented giant-document skew mitigation made executable: the
-    layout shuffle keys on (doc_id, page), so the skew unit drops from
-    document to page — bounded by construction — and only the final
-    cheap span-row groupBy sees whole documents.
+    ``page_col`` names an optional page-number column (cast to bigint)
+    for corpora that arrive one content stream per PAGE (real PDFs):
+    each page is laid out in its OWN coordinate space (page 2's y=700
+    must not interleave with page 1's), spans are ordered (page —
+    NULL first —, reading order) and offset gaplessly per document.
+    Without it all of a doc_id's rows share one coordinate space.
 
-    Plan (asserted in tests/test_plan_shapes.py): the tokenize pass is
-    exchange-free; end-to-end exactly 2 hash exchanges, both on doc_id
-    — the runs-sized layout shuffle, then a block-sized one where the
-    media union re-enters the offset window + final groupBy (blocks +
-    media rows only, orders of magnitude smaller than runs).  With
-    ``page_col`` the first two key on the composed (doc_id, page) and
-    a third block-sized exchange regroups per doc_id."""
-    from .layout import spans_from_runs
+    Plan (asserted in tests/test_plan_shapes.py): ONE hash exchange,
+    on doc_id, of the stream rows; a per-partition sort makes each
+    document's rows contiguous, and tokenize, layout and span assembly
+    run per document in one ``mapInArrow`` pass (`layout.by_doc`).
+    The skew and memory unit is therefore the whole document, with or
+    without ``page_col``: all of a document's pages tokenize and lay
+    out in one task.  Corpora of whole files skip even that exchange
+    (`pdffile.files_to_spans`)."""
+    from .layout import by_doc
 
-    _SEP = "\x1f"
-    if page_col is not None:
-        keyed_cols = [
-            F.concat_ws(_SEP, F.col(id_col).cast("string"),
-                        F.col(page_col).cast("long").cast("string"))
-            .alias("__pkey"),
-            F.col(stream_col).alias(stream_col)]
-        if maps_col is not None:
-            keyed_cols.append(F.col(maps_col).alias(maps_col))
-        keyed = docs.select(*keyed_cols)
-        runs = runs_for_layout(
-            tokenize_streams(keyed, stream_col, "__pkey",
-                             maps_col=maps_col,
-                             drop_artifacts=drop_artifacts),
-            page_height)
-    else:
-        runs = runs_for_layout(
-            tokenize_streams(docs, stream_col, id_col,
-                             maps_col=maps_col,
-                             drop_artifacts=drop_artifacts),
-            page_height)
-    span_rows = spans_from_runs(runs, y_tol=y_tol, gap_tol=gap_tol,
-                                with_fonts=with_fonts,
-                                space_frac=space_frac,
-                                detect_tables=detect_tables,
-                                col_gap=col_gap, col_tol=col_tol)
-    if page_col is not None:
-        w = Window.partitionBy("real_doc").orderBy("page", "offset")
-        span_rows = span_rows.select(
-            F.substring_index("doc_id", _SEP, 1).alias("real_doc"),
-            F.substring_index("doc_id", _SEP, -1).cast("long")
-            .alias("page"),
-            *[c for c in span_rows.columns if c != "doc_id"]) \
-            .withColumn("offset",
-                        (F.row_number().over(w) - 1).cast("int")) \
-            .withColumnRenamed("real_doc", "doc_id").drop("page")
-    fields = ["offset", "kind", "text", "media_ref"] \
-        + (["font", "size"] if with_fonts else [])
-    spans = F.array_sort(F.collect_list(F.struct(*fields)))
+    layout = dict(y_tol=y_tol, gap_tol=gap_tol, space_frac=space_frac,
+                  detect_tables=detect_tables, col_gap=col_gap,
+                  col_tol=col_tol)
+    memo: dict = {}
 
-    def span_struct(s):
-        parts = [s["kind"].alias("kind"),
-                 F.coalesce(s["text"], F.lit("")).alias("text"),
-                 F.coalesce(s["media_ref"], F.lit(""))
-                 .alias("media_ref"),
-                 s["offset"].cast("int").alias("offset")]
-        if with_fonts:
-            parts += [F.coalesce(s["font"], F.lit("")).alias("font"),
-                      s["size"].alias("size")]
-        return F.struct(*parts)
+    def kernel(doc_id, rows):
+        # pages in order, NULL first; rows of one page share its space
+        rows = sorted(rows, key=lambda r: (r[1] is not None, r[1] or 0))
+        pages = [[(stream, js) for _, _, stream, js in page]
+                 for _, page in groupby(rows, key=lambda r: r[1])]
+        spans = doc_spans(pages, memo, page_height, drop_artifacts,
+                          with_fonts, **layout)
+        return [(doc_id, spans)] if spans else []
 
-    return (span_rows.groupBy("doc_id")
-            .agg(F.transform(spans, span_struct).alias("spans")))
+    sel = docs.select(
+        F.col(id_col).cast("string").alias("doc_id"),
+        (F.col(page_col) if page_col is not None else F.lit(None))
+        .cast("long").alias("page"),
+        F.col(stream_col).alias("stream"),
+        (F.col(maps_col) if maps_col is not None else F.lit(None))
+        .cast("string").alias("fontmaps"))
+    return by_doc(sel, kernel, spans_schema(with_fonts))
 
 
 def ruled_table_rows(docs: DataFrame, stream_col: str = "stream",
                      id_col: str = "doc_id",
                      maps_col: str | None = None,
+                     page_col: str | None = None,
                      **kwargs) -> DataFrame:
     """Content streams -> ruled-table rows: the pdfplumber-default
     'lines' table strategy end-to-end (the reference's
@@ -926,9 +957,12 @@ def ruled_table_rows(docs: DataFrame, stream_col: str = "stream",
     Returns (doc_id, tbl_idx, row_idx, n_rows, n_cols, table_text);
     ``table_text`` is the ' | '-joined TABLE_ROW_MARKER shape, so the
     rows can re-enter the S5/C6/T6 table chain as ``table_row`` spans.
+    ``page_col`` detects per (doc_id, page) — each page in its own
+    coordinate space — and adds ``page`` after ``doc_id``.
     """
     from .layout import detect_ruled_tables
 
     runs = tokenize_streams(docs, stream_col, id_col,
-                            maps_col=maps_col, with_rules=True)
+                            maps_col=maps_col, with_rules=True,
+                            page_col=page_col)
     return detect_ruled_tables(runs, **kwargs)

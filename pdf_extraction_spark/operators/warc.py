@@ -575,9 +575,9 @@ def dedupe_captures(recs: DataFrame,
     re-crawls are routine in crawl segments — a segment can carry two
     response records for one URI — and since dispatch keys documents by
     target URI, distinct captures of one URI would otherwise collide:
-    the pdf/epub branches groupBy doc_id and would interleave pages from
-    different captures into one corrupted span array, and the flat
-    families would emit duplicate doc_id rows.  Winner = max
+    the epub branch groups by doc_id and would interleave chapters from
+    different captures into one corrupted span array, and the per-file
+    families (pdf included) would emit duplicate doc_id rows.  Winner = max
     (WARC-Date, warc_id, rec_idx) lexicographically, so the newest
     capture is kept with a total deterministic tie-break.
 
@@ -721,7 +721,10 @@ def dispatch_spans(recs: DataFrame, ok_only: bool = True,
     WordprocessingML / PresentationML through the office parsers,
     and standalone image ``resource`` records as single-media-span
     documents.  doc_id =
-    WARC-Target-URI throughout (the crawl-native identity).
+    WARC-Target-URI throughout (the crawl-native identity).  A PDF
+    record yields exactly one row: a PDF with no text or media lands
+    as a doc with an empty span array (``files_to_spans`` keeps one
+    row per file; ``pdfstream.pdf_to_spans`` drops such docs).
 
     This is the 'one segment, any payload' move a crawl-shaped corpus
     needs: a mixed container lands on the BASELINE.json input_hint
@@ -735,9 +738,10 @@ def dispatch_spans(recs: DataFrame, ok_only: bool = True,
     Shape: with ``dedupe`` (default) the record rows pay ONE shuffle —
     the latest-capture-per-URI ``dedupe_captures`` aggregation, which
     crawl semantics require (see its docstring) — after which the
-    html/docx/pptx/xlsx/media branches are map-only; the pdf/epub
-    branches pay their documented bounded per-doc reassembly
-    exchanges.  No joins with the default strategies (plan-asserted
+    html/pdf/docx/pptx/xlsx/media branches are map-only (the pdf
+    branch parses, tokenizes and lays out each file in one pass); the
+    epub branch pays its documented bounded per-doc reassembly
+    exchange.  No joins with the default strategies (plan-asserted
     in tests/test_warc.py; ``dedupe_strategy='broadcast'`` is the one
     documented exception — it adds the loser broadcast left_anti
     join).  Feed this from a LANDED records table

@@ -218,10 +218,10 @@ def _kern_stream_expr() -> str:
 
 def q_pdf_kerned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-aware word joining on kerned/font-split show strings
-    (operators/layout.py assemble_lines space_frac — the pdfplumber
-    x_tolerance semantic): TJ kerns inside a word must NOT synthesize
-    spaces, inter-word kerns and Tm hops MUST, via the default
-    ``pdf_to_spans`` path."""
+    (operators/layout.py line assembly with space_frac — the
+    pdfplumber x_tolerance semantic): TJ kerns inside a word must NOT
+    synthesize spaces, inter-word kerns and Tm hops MUST, via the
+    default ``pdf_to_spans`` path."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs = d.select(
         "doc_id",
@@ -290,11 +290,11 @@ def _table_stream_expr() -> str:
 
 
 def q_pdf_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geometric table recovery (operators/layout.py
-    detect_table_lines — the pdfplumber 'text' table strategy as
-    windows): a drawn table whose cells are Tm-positioned runs with
-    NO delimiter bytes emits as ' | '-joined table_row spans, the
-    shape the S5/C6/T6 table operators consume."""
+    """Geometric table recovery (operators/layout.py detect_tables —
+    the pdfplumber 'text' table strategy): a drawn table whose cells
+    are Tm-positioned runs with NO delimiter bytes emits as ' | '-joined
+    table_row spans, the shape the S5/C6/T6 table operators
+    consume."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs = d.select(
         "doc_id",

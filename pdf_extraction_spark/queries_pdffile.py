@@ -144,27 +144,10 @@ def q_pdf_file_cmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/pdffile.build_pdf_cmap) parse back to the original
     text — fontmaps ride the pages kernel as JSON and decode inside
     the tokenize pass (pdfstream.tokenize_streams maps_col)."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_cmap
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_cmap(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    files = build_pdf_files(d, writer=build_pdf_cmap)
     spans = files_to_spans(files)
     e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
                      F.explode("spans").alias("s"))
@@ -198,27 +181,10 @@ def q_pdf_file_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to the decorated text — page_font_maps composes the
     glyphlist tables when no /ToUnicode is present and the width-1
     maps decode inside the tokenize pass."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_encoding
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_encoding(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    files = build_pdf_files(d, writer=build_pdf_encoding)
     spans = files_to_spans(files)
     e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
                      F.explode("spans").alias("s"))
@@ -253,27 +219,10 @@ def q_pdf_file_xobject(spark: SparkSession, sf_dir: str) -> DataFrame:
     the page scope — operators/pdffile.build_pdf_xobject) parse to
     each invocation's spans at its translated position; the forms
     scope rides the pages kernel JSON and replays inside tokenize."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_xobject
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_xobject(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    files = build_pdf_files(d, writer=build_pdf_xobject)
     spans = files_to_spans(files)
     e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
                      F.explode("spans").alias("s"))
@@ -313,27 +262,10 @@ def q_pdf_file_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     RC4 files (40-bit V1/R2 even docs, 128-bit V2/R3 odd) parse to
     the original text — file key from Algorithm 2 with the empty user
     password, /U verified, per-object keys on strings and streams."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_encrypted
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_encrypted(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    files = build_pdf_files(d, writer=build_pdf_encrypted)
     spans = files_to_spans(files)
     e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
                      F.explode("spans").alias("s"))
@@ -346,27 +278,10 @@ def q_pdf_file_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _nav_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_nav
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_nav(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    return d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                    "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    return build_pdf_files(d, writer=build_pdf_nav)
 
 
 def q_pdf_file_outline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,27 +339,10 @@ def q_pdf_file_acroform(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested fields, /FT and /V inheritance, a choice kid, a button
     whose /T-less widget kids collapse to one row) parse to
     (name, ftype, value) rows the oracle states in closed form."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import acroform_table, build_pdf_acroform
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_acroform(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    files = build_pdf_files(d, writer=build_pdf_acroform)
     t = acroform_table(files)
     return t.select(F.col("doc_id").cast("long").alias("doc_id"),
                     F.col("ord").cast("long").alias("ord"),
@@ -473,27 +371,10 @@ def q_pdf_file_annots(spark: SparkSession, sf_dir: str) -> DataFrame:
     /Text, /Highlight, parity-conditional /Square rows with /Link and
     /Popup excluded (operators/pdffile.build_pdf_annots) — reviewer
     commentary that lives outside the content streams."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import annot_table, build_pdf_annots
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_annots(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    files = build_pdf_files(d, writer=build_pdf_annots)
     t = annot_table(files)
     return t.select(F.col("doc_id").cast("long").alias("doc_id"),
                     "page", "subtype", "contents") \
@@ -518,31 +399,13 @@ def q_pdf_file_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedded-file extraction (§7.11.4): /Names -> /EmbeddedFiles
     name tree (-> /Kids intermediates -> /Names leaves) -> filespec
     /EF stream, filters applied — attachments as corpus rows."""
-    import pyarrow as pa
-    from .operators.pdffile import PdfFile
+    from .operators.pdffile import PdfFile, map_files
 
-    files = _nav_files(spark, sf_dir)
-
-    def _parse(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            o_id, o_nm, o_tx = [], [], []
-            for doc_id, blob in zip(ids, blobs):
-                for name, data in PdfFile(blob).embedded_files():
-                    o_id.append(doc_id)
-                    o_nm.append(name)
-                    o_tx.append(data.decode("utf-8"))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, type=pa.string()),
-                 pa.array(o_nm, type=pa.string()),
-                 pa.array(o_tx, type=pa.string())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("name", pa.string()),
-                                  ("content", pa.string())]))
-
-    t = files.mapInArrow(
-        _parse, schema="doc_id string, name string, content string")
+    t = map_files(
+        _nav_files(spark, sf_dir), "pdf", "doc_id",
+        "doc_id string, name string, content string",
+        lambda _, b: [(name, data.decode("utf-8")) for name, data
+                      in PdfFile(b).embedded_files()])
     return t.select(F.col("doc_id").cast("long").alias("doc_id"),
                     "name", "content").orderBy("doc_id", "name")
 
@@ -563,27 +426,10 @@ def q_pdf_file_widths(spark: SparkSession, sf_dir: str) -> DataFrame:
     /MissingWidth drive the advance instead of the uniform 0.5-em
     fallback; the Type0 line repeats the pattern through 2-byte CIDs
     and the descendant's §9.7.4.3 /W+/DW."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_widths
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_widths(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    files = build_pdf_files(d, writer=build_pdf_widths)
     spans = files_to_spans(files)
     e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
                      F.explode("spans").alias("s"))

@@ -198,19 +198,35 @@ _TABLE_RUNS = [
 
 
 def test_detect_table_lines_needs_two_aligned_multicol_lines(spark):
-    from pdf_extraction_spark.operators.layout import (
-        assemble_lines, cluster_lines, detect_table_lines)
-    lines = assemble_lines(cluster_lines(_runs(spark, _TABLE_RUNS)),
-                           col_gap=18.0)
-    out = {r.text: r for r in detect_table_lines(lines).collect()}
-    assert out["Item Cost"].is_table is True
-    assert out["Item Cost"].table_text == "Item | Cost"
-    assert out["Roof $150"].table_text == "Roof | $150"
+    """Geometric table detection through spans_from_runs(detect_tables=
+    True): only a run of >= 2 vertically adjacent lines with >= 2
+    column-aligned cells is a table."""
+    from pdf_extraction_spark.operators.layout import spans_from_runs
+    runs = _TABLE_RUNS + [
+        # two aligned 2-cell lines with a 1-cell line between them: not
+        # adjacent, so neither is a table
+        (1, "p", 0.0, 120.0, 20.0, 128.0, 10.0),
+        (1, "q", 200.0, 120.0, 220.0, 128.0, 10.0),
+        (1, "gap", 0.0, 134.0, 30.0, 142.0, 10.0),
+        (1, "r", 0.0, 148.0, 20.0, 156.0, 10.0),
+        (1, "s", 200.0, 148.0, 220.0, 156.0, 10.0),
+        (1, "sep", 0.0, 170.0, 30.0, 178.0, 10.0),
+        # adjacent 2-cell lines whose second columns sit in different
+        # col_tol buckets (200 vs 212): no table
+        (1, "u", 0.0, 190.0, 20.0, 198.0, 10.0),
+        (1, "v", 200.0, 190.0, 220.0, 198.0, 10.0),
+        (1, "w", 0.0, 204.0, 20.0, 212.0, 10.0),
+        (1, "y", 212.0, 204.0, 232.0, 212.0, 10.0),
+    ]
+    out = spans_from_runs(_runs(spark, runs), gap_tol=4.0,
+                          detect_tables=True).orderBy("offset").collect()
+    texts = [r.text for r in out]
+    assert "Item | Cost" in texts and "Roof | $150" in texts
+    assert [t for t in texts if "|" in t] == ["Item | Cost",
+                                             "Roof | $150"]
     # one cell -> never a candidate; misaligned 2-cell run of 1 -> no
-    assert out["Heading"].is_table is False
-    assert out["wide alone"].is_table is False
-    assert out["wide alone"].table_text is None
-    assert out["tail"].is_table is False
+    assert {"Heading", "wide alone", "tail", "p q", "gap", "r s", "sep",
+            "u v", "w y"} <= set(texts)
 
 
 def test_spans_from_runs_emits_table_rows_as_pipe_spans(spark):
@@ -223,6 +239,91 @@ def test_spans_from_runs_emits_table_rows_as_pipe_spans(spark):
     plain = spans_from_runs(_runs(spark, _TABLE_RUNS)) \
         .orderBy("offset").collect()
     assert not any("|" in r.text for r in plain)
+
+
+# Spark output recorded from the window-function layout chain this
+# kernel replaced, for the value classes where DuckDB's defaults differ
+# from Spark's (so the oracle twins cannot pin them): NULL coordinates
+# order FIRST, and an all-NULL-text line is '' (array_join) in the
+# single-space join but NULL (concat) in the gap-aware one.
+_NULL_RUNS = [
+    (1, "top", 0.0, 0.0, 10.0, 8.0, 10.0),
+    (1, "n2", 20.0, None, 30.0, 8.0, 10.0),
+    (1, "n1", 0.0, None, 10.0, 6.0, 10.0),
+    (1, "b", 50.0, 1.0, 60.0, 9.0, 10.0),
+    (1, "a", None, 1.0, 5.0, 9.0, 10.0),
+    (1, "low", 0.0, 30.0, 10.0, 38.0, None),
+    (2, None, 0.0, 0.0, 10.0, 8.0, 10.0),
+    (2, None, 20.0, 0.0, 30.0, 8.0, 10.0),
+    (2, "x", 0.0, 12.0, 10.0, 20.0, 10.0),
+    (2, None, 20.0, 12.0, 30.0, 20.0, 10.0),
+]
+
+
+def test_null_classes_match_recorded_spark_output(spark):
+    runs = _runs(spark, _NULL_RUNS)
+    cols = ["doc_id", "block_id", "line_id", "text", "x0", "y0", "x1",
+            "y1", "max_size", "n_runs", "is_heading"]
+
+    def lines(**kw):
+        return [tuple(r[c] for c in cols) for r in
+                reconstruct_blocks(runs, **kw)
+                .orderBy("doc_id", "line_id").collect()]
+
+    assert lines() == [
+        (1, 0, 0, "n1", 0.0, None, 10.0, 6.0, 10.0, 1, False),
+        (1, 0, 1, "n2", 20.0, None, 30.0, 8.0, 10.0, 1, False),
+        (1, 0, 2, "a top b", 0.0, 0.0, 60.0, 9.0, 10.0, 3, False),
+        (1, 1, 3, "low", 0.0, 30.0, 10.0, 38.0, None, 1, False),
+        (2, 0, 0, "", 0.0, 0.0, 30.0, 8.0, 10.0, 2, False),
+        (2, 0, 1, "x", 0.0, 12.0, 30.0, 20.0, 10.0, 2, False)]
+    assert lines(space_frac=0.3) == [
+        (1, 0, 0, "n1", 0.0, None, 10.0, 6.0, 10.0, 1, False),
+        (1, 0, 1, "n2", 20.0, None, 30.0, 8.0, 10.0, 1, False),
+        (1, 0, 2, "atop b", 0.0, 0.0, 60.0, 9.0, 10.0, 3, False),
+        (1, 1, 3, "low", 0.0, 30.0, 10.0, 38.0, None, 1, False),
+        (2, 0, 0, None, 0.0, 0.0, 30.0, 8.0, 10.0, 2, False),
+        (2, 0, 1, None, 0.0, 12.0, 30.0, 20.0, 10.0, 2, False)]
+    assert [tuple(r) for r in block_text(reconstruct_blocks(runs))
+            .orderBy("doc_id", "block_id").collect()] == [
+        (1, 0, "n1\nn2\na top b", 0.0, 0.0, 60.0, 9.0, 3, False),
+        (1, 1, "low", 0.0, 30.0, 10.0, 38.0, 1, False),
+        (2, 0, "\nx", 0.0, 0.0, 30.0, 20.0, 2, False)]
+
+
+def test_null_top_media_and_tied_media_order(spark):
+    from pdf_extraction_spark.operators.layout import spans_from_runs
+    runs = spark.createDataFrame([
+        (3, "body", 0.0, 10.0, 10.0, 18.0, 10.0, None),
+        (3, None, 0.0, None, 5.0, 5.0, None, "img:null-top"),
+        (3, None, 0.0, 10.0, 5.0, 20.0, None, "img:b"),
+        (3, None, 0.0, 10.0, 5.0, 20.0, None, "img:a"),
+        (3, "z", None, 40.0, 5.0, 48.0, 10.0, None),
+    ], SCHEMA + ", media_ref string")
+    assert [tuple(r) for r in spans_from_runs(runs)
+            .orderBy("offset").collect()] == [
+        (3, 0, "media", None, "img:null-top"),
+        (3, 1, "media", None, "img:a"),
+        (3, 2, "media", None, "img:b"),
+        (3, 3, "text", "body", None),
+        (3, 4, "text", "z", None)]
+
+
+def test_layout_fuzz_sample(spark):
+    """40 seeds of the differential layout fuzz (tools/fuzz_layout.py;
+    the committed campaign runs thousands), half of them hostile
+    (NULL text/size/font, NaN/±inf/-0.0 coordinates, full ties,
+    non-ASCII text, coincident media), batched into one corpus: the
+    kernel's blocks and spans equal the DuckDB window-function twin."""
+    import random
+
+    import tools.fuzz_layout as fz
+
+    rows = []
+    for seed in range(40):
+        rows += fz.gen_runs(random.Random(1000 + seed),
+                            hostile=seed % 2 == 1, doc_base=seed * 100)
+    assert fz.diverging(spark, rows) == []
 
 
 # ------------------------------------------------- ruled-line tables

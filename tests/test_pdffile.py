@@ -949,6 +949,55 @@ def test_files_to_ruled_tables_end_to_end(spark):
         (0, 0, 2, " |  | 75")]
 
 
+def test_doc_ids_pass_through_verbatim(spark):
+    """files_to_spans emits ONE row per input file with its doc_id
+    verbatim, and files_to_ruled_tables keys pages on the (doc_id,
+    page) columns: NULL ids, ids holding the old key separator and
+    repeated ids must neither be renamed nor merged.  (A composed
+    doc||page string key once turned two NULL-id files into docs '0'
+    and '1' with interleaved text, cut 'a\\x1fb' to 'a', and merged
+    the two 'dup' files into one interleaved doc.)"""
+    from pdf_extraction_spark.operators.pdffile import (
+        files_to_ruled_tables, files_to_spans, wrap_content_stream)
+
+    def pdf(content: bytes) -> bytearray:
+        return bytearray(wrap_content_stream(0, content))
+
+    def shown(text: str) -> bytearray:
+        return pdf(f"BT /F1 10 Tf 72 700 Td ({text}) Tj ET".encode())
+
+    files = [(None, shown("alpha beta gamma")),
+             (None, shown("the delta eps")), ("a\x1fb", shown("sep id")),
+             ("dup", shown("first copy")), ("dup", shown("second copy")),
+             ("blank", pdf(b""))]
+    df = spark.createDataFrame(files, "doc_id string, pdf binary")
+
+    def key(row):
+        return (row[0] is not None, row[0] or "", row[1])
+
+    got = sorted(((r.doc_id, [s.text for s in r.spans])
+                  for r in files_to_spans(df).collect()), key=key)
+    assert got == sorted([(None, ["alpha beta gamma"]),
+                          (None, ["the delta eps"]),
+                          ("a\x1fb", ["sep id"]), ("dup", ["first copy"]),
+                          ("dup", ["second copy"]), ("blank", [])],
+                         key=key)
+
+    grid = (b"72 628 420 72 re S "
+            b"212 628 m 212 700 l S 352 628 m 352 700 l S "
+            b"72 652 m 492 652 l S 72 676 m 492 676 l S "
+            b"BT /F1 10 Tf 76 688 Td (Item) Tj ET")
+    df = spark.createDataFrame([("a\x1fb", pdf(grid)), (None, pdf(grid))],
+                               "doc_id string, pdf binary")
+    rows = sorted((r.doc_id is not None, r.doc_id, r.page, r.row_idx,
+                   r.table_text)
+                  for r in files_to_ruled_tables(df).collect())
+    assert [r[1:] for r in rows] == [
+        (None, 0, 0, "Item |  | "), (None, 0, 1, " |  | "),
+        (None, 0, 2, " |  | "), ("a\x1fb", 0, 0, "Item |  | "),
+        ("a\x1fb", 0, 1, " |  | "), ("a\x1fb", 0, 2, " |  | ")]
+
+
 def test_artifact_strip_through_whole_file_layer(spark):
     """drop_artifacts flows through files_to_spans' kwargs: a tagged
     header inside a real wrapped PDF drops, the body survives."""

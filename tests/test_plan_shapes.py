@@ -267,33 +267,43 @@ def test_html_extraction_zero_shuffle(spark):
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
 
 
-def test_pdf_bridge_two_docid_exchanges(spark):
-    """pdf_to_spans end-to-end: the tokenize pass is exchange-free
-    (pinned separately in test_pdfstream), and the whole bridge plans
-    exactly 2 hash exchanges, both keyed on doc_id — the runs-sized
-    layout shuffle plus the block-sized media-union/offset/groupBy one.
-    A third exchange (or a non-doc_id key) is a 100x-scale regression."""
-    from pdf_extraction_spark.operators.pdfstream import pdf_to_spans
-    from pdf_extraction_spark.queries_pdf import _pdf_streams
-
-    plan = _plan(pdf_to_spans(_pdf_streams(spark, SF_DIR)))
-    assert plan.count("Exchange hashpartitioning") == 2
+def test_pdf_layout_map_only_or_one_docid_exchange(spark):
+    """The per-page layout kernel runs inside mapInArrow: whole PDF
+    files (files_to_spans) parse, tokenize and lay out in ONE map-only
+    pass with no Exchange at all; content-stream and run-table corpora
+    (pdf_to_spans, with or without page_col, and spans_from_runs) pay
+    exactly one hash exchange, keyed on doc_id, to bring a document's
+    rows together.  A second exchange, or a key other than doc_id, is
+    a 100x-scale regression."""
     import re
-    for m in re.finditer(r"Exchange hashpartitioning\(([^,]+),", plan):
-        assert m.group(1).startswith("doc_id"), m.group(0)
 
-    # page_col: layout keys on the composed (doc_id, page) key — the
-    # giant-doc skew unit drops to a page — plus one doc_id regroup
-    paged = _pdf_streams(spark, SF_DIR).withColumn(
-        "page", F.lit(1))
-    pplan = _plan(pdf_to_spans(paged, page_col="page"))
-    assert pplan.count("Exchange hashpartitioning") == 3
-    keys = [m.group(1) for m in re.finditer(
-        r"Exchange hashpartitioning\(([^,]+),", pplan)]
-    # physical names: __pkey (layout), real_doc (the per-doc offset
-    # window before its rename back to doc_id), doc_id (final groupBy)
-    assert sum(k.startswith(("__pkey", "real_doc", "doc_id#"))
-               for k in keys) == 3
+    from pdf_extraction_spark.operators.layout import spans_from_runs
+    from pdf_extraction_spark.operators.pdffile import files_to_spans
+    from pdf_extraction_spark.operators.pdfstream import (pdf_to_spans,
+                                                          runs_for_layout,
+                                                          tokenize_streams)
+    from pdf_extraction_spark.queries_pdf import _pdf_streams
+    from pdf_extraction_spark.queries_pdffile import _pdf_files
+
+    files = _pdf_files(spark, SF_DIR)
+    plan = _plan(files_to_spans(files))
+    assert "Exchange" not in plan, plan
+    # parse + tokenize + layout: one pass over the files
+    assert plan.count("MapInArrow") \
+        == _plan(files).count("MapInArrow") + 1, plan
+
+    def docid_exchanges(p: str) -> int:
+        keys = re.findall(r"Exchange hashpartitioning\(([^,]+),", p)
+        assert all(k.startswith("doc_id#") for k in keys), keys
+        return len(keys)
+
+    streams = _pdf_streams(spark, SF_DIR)
+    assert docid_exchanges(_plan(pdf_to_spans(streams))) == 1
+    paged = streams.withColumn("page", F.lit(1))
+    assert docid_exchanges(_plan(pdf_to_spans(paged, page_col="page"))) \
+        == 1
+    runs = runs_for_layout(tokenize_streams(streams))
+    assert docid_exchanges(_plan(spans_from_runs(runs))) == 1
 
 
 def test_ruled_tables_single_scan_single_exchange(spark):

@@ -293,6 +293,26 @@ def test_dispatch_matches_direct_family_parsers(spark, docs):
         assert got[uri] == [tuple(s) for s in r["spans"]], uri
 
 
+def test_dispatch_blank_pdf_lands_as_empty_doc(spark):
+    """A PDF response with no text or media is still one document: the
+    pdf branch keeps one row per file, with an empty span array."""
+    from pdf_extraction_spark.operators.pdffile import wrap_content_stream
+    from pdf_extraction_spark.operators.warc import (
+        PDF_MIME, dispatch_spans, records_from_warc)
+    body = wrap_content_stream(0, b"")
+    msg = (f"HTTP/1.1 200 OK\r\nContent-Type: {PDF_MIME}\r\n"
+           f"Content-Length: {len(body)}\r\n\r\n").encode() + body
+    blob = warc_record(
+        "response",
+        [("WARC-Target-URI", "https://h.example/blank.pdf"),
+         ("Content-Type", "application/http;msgtype=response")], msg)
+    files = spark.createDataFrame([("w1", bytearray(blob))],
+                                  "warc_id string, warc binary")
+    got = [(r["doc_id"], list(r["spans"])) for r in
+           dispatch_spans(records_from_warc(files)).collect()]
+    assert got == [("https://h.example/blank.pdf", [])]
+
+
 def test_dispatch_staged_equals_direct(spark, docs, tmp_path):
     from pdf_extraction_spark.operators.warc import warc_dispatch_spans
     key = lambda r: r["doc_id"]  # noqa: E731
