@@ -26,6 +26,27 @@ loops over *blocks*:
     (SURVEY.md §7.4.1) — plus A4 raw-section accumulation in the same fold;
   - S5 table-run assembly and J1 cost linking (a handful of rows per doc).
 
+S1/T7 metadata: each first-match-wins cascade (31 patterns) runs as RE2
+scans (pyarrow.compute.extract_regex) over the batch's page-1 and
+first-two-pages texts; rules.re2 rewrites \\s, \\w and \\d to python's
+Unicode classes. A per-process memo checks each distinct non-ASCII or NUL
+character once: does every atom the patterns use (\\s \\S \\w \\d . [^\\n]
+and the ASCII letters, with and without re.IGNORECASE) classify it alike
+under python re and under the rewrite? A document holding a character
+where they differ matches under python re instead — the engine the
+reference and the oracle use. In the BMP those are U+0130 and U+0131,
+which python's re.IGNORECASE folds to 'i', and U+0345, which RE2 folds
+into \\w (tests/test_extraction_fuzz.py pins the set); beyond it, the
+characters the two engines' Unicode tables disagree on. The per-match
+post-processing is one function for both.
+
+Fusion with enrichment: ``assemble_fused`` records its (repartitioned)
+input on the DataFrame it returns. While that DataFrame is neither
+persisted nor cached, plans/enrichment.enrich_extracted runs extraction
+and enrichment as ONE ``mapInArrow`` over the docs; any other input
+(persisted or cached extraction, ``assemble_auto``, a further transform)
+takes the generic enrichment pass over the extraction output.
+
 Scale notes (100 TB / 10^12 docs):
   - No shuffle: the job is map-only; 1000 executors scale linearly.
   - Skew: a giant doc (500k spans) is one row; round-robin repartition
@@ -40,14 +61,16 @@ Output is row-identical to plans/extraction.assemble (same golden tests).
 from __future__ import annotations
 
 import re
+import string
 import warnings
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .. import rules
 
@@ -59,25 +82,6 @@ from ..corpus import LINES_PER_PAGE
 from ..oracle import (KIND_BOILERPLATE, KIND_MEDIA, KIND_SECTION, KIND_STATUS,
                       KIND_SUBSECTION, KIND_TABLE_ROW, KIND_TEXT,
                       TABLE_ROW_MARKER, _classify_table, _cost_from_table)
-
-OUTPUT_SCHEMA = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,order:int>>, "
-    "issues array<struct<id:string,section:string,subsection:string,"
-    "status:string,priority:string,title:string,description:string,"
-    "page_numbers:array<int>,"
-    "estimated_cost:struct<min:double,max:double,average:double>>>, "
-    "tables array<struct<page_num:int,section:string,table_type:string,"
-    "headers:array<string>,table_data:array<array<string>>>>, "
-    "raw_sections map<string,string>, "
-    "metadata struct<total_pages:int,report_type:string,report_number:string,"
-    "inspection_date:string,property_address:string,square_footage:int,"
-    "year_built:int,stories:int,home_type:string,lot_size:string,"
-    "bedrooms:int,bathrooms:double,location:string>, "
-    "summary struct<total_issues:int,deficient:long,inspected:long,"
-    "not_inspected:long,not_present:long,high:long,medium:long,low:long,"
-    "info:long,total_tables:long>"
-)
 
 _SPAN_T = pa.struct([("kind", pa.string()), ("text", pa.string()),
                      ("media_ref", pa.string()), ("order", pa.int32())])
@@ -110,15 +114,16 @@ PA_SCHEMA = pa.schema([
     ("issues", pa.list_(_ISSUE_T)), ("tables", pa.list_(_TABLE_T)),
     ("raw_sections", pa.map_(pa.string(), pa.string())),
     ("metadata", _META_T), ("summary", _SUMMARY_T)])
+OUTPUT_SCHEMA = from_arrow_schema(PA_SCHEMA)
 
 _DIRTY_RE = re.compile(r"[^\x01-\x7f]")
 _ALTERNATION_CACHE: dict[int, str] = {}
 
-# python-re twins for the RE2 batch scans: RE2's \s/\b are ASCII-only and
-# it treats U+2028/U+2029 as line terminators, so rows containing any
-# non-ASCII char re-run under python re — the engine the reference (and
-# the golden oracle) uses. Same two-tier design as _normalize_series;
-# non-ASCII survivors of T1 are rare at scale, so the slow tier is cold.
+# python-re twins for the RE2 batch scans: RE2's \b is ASCII-only, so rows
+# containing any non-ASCII char re-run under python re — the engine the
+# reference (and the golden oracle) uses. Same two-tier design as
+# _normalize_series; non-ASCII survivors of T1 are rare at scale, so the
+# slow tier is cold.
 _SEC_PY = re.compile(rules.SECTION_RE)
 _SUB_PY = re.compile(rules.SUBSECTION_RE)
 _BARE_PY = re.compile(rules.BARE_STATUS_RE)
@@ -170,106 +175,148 @@ def _contains_any_pa(low: "pa.Array", words: list[str]) -> np.ndarray:
         .to_numpy(zero_copy_only=False)
 
 
-def _contains_any(low: pd.Series, words: list[str]) -> pd.Series:
-    """Pandas-side variant for small inputs."""
-    return low.str.contains(re.compile(_alt_pattern(words)))
+# S1/T7 metadata on RE2. Every pattern has exactly one capturing group;
+# pyarrow's extract_regex takes named groups only.
+_GROUP_RE = re.compile(r"\\.|\[(?:\\.|[^\]])+\]|\((?!\?)")
+_EXTRACT_CACHE: dict[tuple[str, int], str] = {}
 
 
-def _first_extract(s: pd.Series, patterns: list[str],
-                   flags: int = 0) -> pd.Series:
-    """First-match-wins pattern cascade, vectorized (T7 semantics)."""
-    out = pd.Series([None] * len(s), index=s.index, dtype=object)
-    for p in patterns:
-        need = out.isna()
-        if not need.any():
-            break
-        ext = s[need].str.extract(re.compile(p, flags))[0].astype(object)
-        got = ext[ext.notna()]
-        out[got.index] = got
+def _extract_pattern(pattern: str, flags: int) -> str:
+    """``pattern`` in RE2 form (rules.re2) with its capturing group named."""
+    key = (pattern, flags)
+    out = _EXTRACT_CACHE.get(key)
+    if out is None:
+        groups = [m for m in _GROUP_RE.finditer(pattern) if m.group() == "("]
+        if len(groups) != 1:
+            raise ValueError(f"{pattern!r}: want one capturing group")
+        at = groups[0].end()
+        out = rules.re2(pattern[:at] + "?P<g>" + pattern[at:])
+        out = ("(?i)" if flags & re.IGNORECASE else "") + out
+        _EXTRACT_CACHE[key] = out
     return out
 
 
-def _to_obj(s: pd.Series) -> pd.Series:
-    return s.astype(object).where(s.notna(), None)
+# Per-process memo: does every regex atom the metadata patterns use
+# classify this character alike under python re and under rules.re2?
+_RE2_ATOMS = [r"\s", r"\S", r"\w", r"\d", ".", r"[^\n]",
+              *string.ascii_letters]
+_RE2_AGREES: dict[str, bool] = {}
+
+
+def _re2_unsafe(chars: set[str]) -> set[str]:
+    """The characters of ``chars`` on which some atom, with or without
+    re.IGNORECASE, differs between python re and its RE2 rewrite."""
+    new = [c for c in chars if c not in _RE2_AGREES]
+    if new:
+        joined = "".join(new)
+        arr = pa.array(new, type=pa.string())
+        agree = np.ones(len(new), dtype=bool)
+        for atom in _RE2_ATOMS:
+            for flags in (0, re.IGNORECASE):
+                py = set(re.findall(atom, joined, flags))
+                hit = pc.match_substring_regex(
+                    arr, f"^{_extract_pattern(f'({atom})', flags)}$")
+                agree &= hit.to_numpy(zero_copy_only=False) == np.fromiter(
+                    (c in py for c in new), dtype=bool, count=len(new))
+        _RE2_AGREES.update(zip(new, agree.tolist()))
+    return {c for c in chars if not _RE2_AGREES[c]}
+
+
+def _python_rows(texts: list[str], arr: pa.Array) -> np.ndarray:
+    """Rows holding a character on which RE2 would disagree with python
+    re (only non-ASCII and NUL characters can)."""
+    rows = np.zeros(len(texts), dtype=bool)
+    dirty = np.flatnonzero(pc.match_substring_regex(arr, _DIRTY_RE.pattern)
+                           .to_numpy(zero_copy_only=False))
+    if len(dirty):
+        chars = set().union(*(texts[i] for i in dirty))
+        unsafe = _re2_unsafe({c for c in chars if _DIRTY_RE.match(c)})
+        if unsafe:
+            for i in dirty:
+                rows[i] = not unsafe.isdisjoint(texts[i])
+    return rows
+
+
+def _cascade(texts: list[str], arr: pa.Array, slow: np.ndarray,
+             patterns: list[str], flags: int = 0,
+             accept: Callable[[str], Any] | None = None) -> list[Any]:
+    """First-match-wins pattern cascade (T7 semantics): each row takes
+    the first group match that ``accept`` maps to a non-None value.
+    Rows flagged ``slow`` match under python re, the rest under RE2;
+    ``accept`` runs per row, the same for both."""
+    out: list[Any] = [None] * len(texts)
+    todo = np.arange(len(texts))
+    for p in patterns:
+        if not len(todo):
+            break
+        sub = arr if len(todo) == len(texts) else arr.take(todo)
+        hit = pc.extract_regex(sub, _extract_pattern(p, flags))
+        got = pc.struct_field(hit, [0]).to_numpy(zero_copy_only=False)
+        matched = hit.is_valid().to_numpy(zero_copy_only=False)
+        for j in np.flatnonzero(slow[todo]):
+            m = re.search(p, texts[todo[j]], flags)
+            got[j], matched[j] = (m.group(1), True) if m else (None, False)
+        done = np.zeros(len(todo), dtype=bool)
+        for j in np.flatnonzero(matched):
+            v = got[j] if accept is None else accept(got[j])
+            if v is not None:
+                out[todo[j]] = v
+                done[j] = True
+        todo = todo[~done]
+    return out
+
+
+def _year(g: str) -> int | None:
+    y = int(g)
+    return y if rules.YEAR_MIN <= y <= rules.YEAR_MAX else None
+
+
+def _stories(g: str) -> int | None:
+    v = g.lower()
+    return int(v) if v.isdigit() else rules.STORY_WORDS.get(v)
+
+
+def _location(g: str) -> str:
+    return re.sub(r"\s+", " ", g).strip()
 
 
 def _metadata_records(page1: list[str], first2: list[str],
-                      total_pages: list[int]) -> list[dict]:
-    """S1 (metadata_extractor.py:10-49) + T7 (text_extractor.pyc:273-409),
-    vectorized across the batch's documents."""
-    p1 = pd.Series(page1, dtype=object)
-    p2 = pd.Series(first2, dtype=object)
-    I = re.IGNORECASE  # noqa: E741
+                      total_pages: list[int]) -> pa.StructArray:
+    """S1 (metadata_extractor.py:10-49) + T7 (text_extractor.pyc:273-409)
+    for the batch's documents, each cascade as RE2 scans over the batch
+    (oracle._extract_metadata is the python-re reference)."""
+    p1 = pa.array(page1, type=pa.string())
+    p2 = pa.array(first2, type=pa.string())
+    # page 1's text is part of the first two pages': one check covers both
+    slow = _python_rows(first2, p2)
 
-    def _sx(series: pd.Series, pattern: str, flags: int = 0) -> pd.Series:
-        return series.str.extract(re.compile(pattern, flags))[0].astype(object)
+    def s1(patterns: list[str], accept=None) -> list[Any]:
+        return _cascade(page1, p1, slow, patterns, 0, accept)
 
-    rn = _sx(p1, rules.REPORT_NUMBER_RE)
-    date = _sx(p1, rules.INSPECTION_DATE_RE)
-    date = date.where(date.notna(), _sx(p1, rules.DATE_FALLBACK_RE))
-    date = date.str.strip()
-    addr = _sx(p1, rules.ADDRESS_TX_RE)
-    addr = addr.where(addr.notna(), _sx(p1, rules.ADDRESS_ANY_RE))
+    def t7(patterns: list[str], accept=None) -> list[Any]:
+        return _cascade(first2, p2, slow, patterns, re.IGNORECASE, accept)
 
-    sqft = _first_extract(p2, rules.SQFT_PATTERNS, I).str.replace(",", "")
-
-    year = pd.Series([None] * len(p2), dtype=object)
-    for p in rules.YEAR_PATTERNS:
-        need = year.isna()
-        if not need.any():
-            break
-        ext = pd.to_numeric(
-            p2[need].str.extract(re.compile(p, I))[0], errors="coerce")
-        ok = ext[(ext >= rules.YEAR_MIN) & (ext <= rules.YEAR_MAX)]
-        year[ok.index] = ok.astype(int)
-
-    stories = pd.Series([None] * len(p2), dtype=object)
-    for p in rules.STORIES_PATTERNS:
-        need = stories.isna()
-        if not need.any():
-            break
-        ext = p2[need].str.extract(re.compile(p, I))[0].astype(object).str.lower()
-        digit = ext[ext.str.fullmatch(r"\d", na=False)]
-        stories[digit.index] = digit.astype(int)
-        words = ext[ext.notna() & ~ext.str.fullmatch(r"\d", na=False)]
-        mapped = words.map(rules.STORY_WORDS)
-        mapped = mapped[mapped.notna()]
-        stories[mapped.index] = mapped.astype(int)
-
-    home = _first_extract(p2, rules.HOME_TYPE_PATTERNS, I).str.strip()
-    lot = _first_extract(p2, rules.LOT_PATTERNS, I)
-    beds = pd.to_numeric(_first_extract(p2, rules.BED_PATTERNS, I),
-                         errors="coerce")
-    baths = pd.to_numeric(_first_extract(p2, rules.BATH_PATTERNS, I),
-                          errors="coerce")
-    loc = _first_extract(p2, rules.LOCATION_PATTERNS, I)
-    loc = loc.str.replace(r"\s+", " ", regex=True).str.strip()
-
-    frame = pd.DataFrame({
-        "total_pages": pd.Series(total_pages, dtype=object),
-        "report_type": p1.str.contains(
-            rules.REPORT_TYPE_ESTIMATE_MARKER, regex=False)
-            .map({True: "estimate", False: "inspection"}),
-        "report_number": _to_obj(rn),
-        "inspection_date": _to_obj(date),
-        "property_address": _to_obj(addr),
-        "square_footage": _to_obj(pd.to_numeric(sqft, errors="coerce")),
-        "year_built": _to_obj(year),
-        "stories": _to_obj(stories),
-        "home_type": _to_obj(home),
-        "lot_size": _to_obj(lot),
-        "bedrooms": _to_obj(beds),
-        "bathrooms": _to_obj(baths),
-        "location": _to_obj(loc),
-    })
-    recs = frame.to_dict("records")
-    for r in recs:
-        for k in ("square_footage", "year_built", "stories", "bedrooms"):
-            if r[k] is not None:
-                r[k] = int(r[k])
-        if r["bathrooms"] is not None:
-            r["bathrooms"] = float(r["bathrooms"])
-    return recs
+    estimate = pc.match_substring(p1, rules.REPORT_TYPE_ESTIMATE_MARKER)
+    cols = {
+        "total_pages": total_pages,
+        "report_type": pc.if_else(estimate, "estimate", "inspection"),
+        "report_number": s1([rules.REPORT_NUMBER_RE]),
+        "inspection_date": s1([rules.INSPECTION_DATE_RE,
+                               rules.DATE_FALLBACK_RE], str.strip),
+        "property_address": s1([rules.ADDRESS_TX_RE, rules.ADDRESS_ANY_RE]),
+        "square_footage": t7(rules.SQFT_PATTERNS,
+                             lambda g: int(g.replace(",", ""))),
+        "year_built": t7(rules.YEAR_PATTERNS, _year),
+        "stories": t7(rules.STORIES_PATTERNS, _stories),
+        "home_type": t7(rules.HOME_TYPE_PATTERNS, str.strip),
+        "lot_size": t7(rules.LOT_PATTERNS),
+        "bedrooms": t7(rules.BED_PATTERNS, int),
+        "bathrooms": t7(rules.BATH_PATTERNS, float),
+        "location": t7(rules.LOCATION_PATTERNS, _location),
+    }
+    return pa.StructArray.from_arrays(
+        [pa.array(cols[f.name], type=f.type) for f in _META_T],
+        fields=list(_META_T))
 
 
 def _classify_arrays(raw_kinds: np.ndarray,
@@ -553,8 +600,7 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
         "tables": pa.array(all_tables, type=pa.list_(_TABLE_T)),
         "raw_sections": pa.array(all_rawsec,
                                  type=pa.map_(pa.string(), pa.string())),
-        "metadata": pa.array(_metadata_records(meta_p1, meta_f2, meta_tp),
-                             type=_META_T),
+        "metadata": _metadata_records(meta_p1, meta_f2, meta_tp),
         "summary": pa.array(all_summary, type=_SUMMARY_T),
     }
 
@@ -617,31 +663,14 @@ def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
         schema=PA_SCHEMA)
 
 
-def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pandas adapter (tests / driver-side use)."""
-    doc_ids = np.asarray(pdf["doc_id"].tolist(), dtype=object)
-    kinds, texts, refs, offs = [], [], [], []
-    lengths = []
-    for spans in pdf["spans"]:
-        spans = sorted(spans, key=lambda x: x["offset"])
-        lengths.append(len(spans))
-        for sp in spans:
-            kinds.append(sp["kind"])
-            texts.append(sp["text"])
-            refs.append(sp["media_ref"])
-            offs.append(sp["offset"])
-    bounds = np.concatenate(([0], np.cumsum(np.array(lengths, dtype=np.int64))))
-    cols = _extract_core(
-        doc_ids, bounds, np.array(kinds, dtype=object),
-        np.array(texts, dtype=object), np.array(refs, dtype=object),
-        np.array(offs, dtype=np.int64))
-    return pa.table(cols).to_pandas()
-
-
 def assemble_fused(docs: DataFrame, partitions: int | None = None) -> DataFrame:
     """docs(doc_id, spans) -> one structured row per doc; zero shuffles
     (the optional repartition is a round-robin exchange for skew-evenness,
-    not a key shuffle)."""
+    not a key shuffle).
+
+    The result records its (repartitioned) input as ``_fused_input``:
+    plans/enrichment.enrich_extracted runs extraction and enrichment in
+    one pass from it while the result is neither persisted nor cached."""
     if partitions is not None:
         docs = docs.repartition(partitions)
 
@@ -654,7 +683,9 @@ def assemble_fused(docs: DataFrame, partitions: int | None = None) -> DataFrame:
             if rb.num_rows:
                 yield extract_record_batch(rb)
 
-    return docs.mapInArrow(run, schema=OUTPUT_SCHEMA)
+    out = docs.mapInArrow(run, schema=OUTPUT_SCHEMA)
+    out._fused_input = docs
+    return out
 
 
 def assemble_auto(docs: DataFrame, giant_spans: int | None = 500_000,

@@ -107,24 +107,31 @@ def jre(pattern: str) -> str:
     return out
 
 
-# RE2's \s is [\t\n\f\r ] — it excludes \x0b (vertical tab) and the
-# U+001C-1F separators, ALL of which python's \s matches and all of which
-# are ASCII, so they sail past the fused kernels' non-ASCII python-re
-# reroute. Found by the extended differential fuzz (an 'A. \x0b...'
-# subsection heading classified text by the RE2 tier only). The RE2 tier
-# only ever sees ASCII rows, so parity needs exactly the ASCII members of
-# python's \s.
-_RE2_S_MEMBERS = r" \t\n\r\f\x0b\x1c-\x1f"
+# python-re's \s is exactly str.isspace(): Unicode White_Space plus the
+# U+001C-1F separators. RE2's \s is [\t\n\f\r ] — it misses \x0b and
+# \x1c-\x1f, which are ASCII (found by the extended differential fuzz: an
+# 'A. \x0b...' subsection heading classified text by the RE2 tier only),
+# and every non-ASCII space.
+_RE2_S_MEMBERS = (r"\t\n\x0b\x0c\r\x1c-\x20\x{85}\x{a0}\x{1680}"
+                  r"\x{2000}-\x{200a}\x{2028}\x{2029}\x{202f}\x{205f}"
+                  r"\x{3000}")
+# python-re's \w is str.isalnum() or '_', its \d category Nd; RE2's are
+# ASCII-only
+_RE2_W_MEMBERS = r"\p{L}\p{N}_"
 _RE2_CACHE: dict[str, str] = {}
 
 
 def re2(pattern: str) -> str:
-    """Compile a shared pattern to RE2 form with python-re semantics on
-    ASCII input (for pyarrow.compute regex scans in the fused kernels;
-    non-ASCII rows are re-run under python re by the callers, so only
-    ASCII-range divergences matter here). \\s/\\S are rewritten into
-    explicit classes (emitted as bare members inside an existing [...]
-    class); \\w/\\b/\\d are ASCII-identical between the engines."""
+    """Compile a shared pattern to RE2 form with python-re semantics, for
+    pyarrow.compute regex scans. \\s, \\w and \\d become the explicit
+    Unicode classes python's str patterns use (emitted as bare members
+    inside an existing [...] class), \\S their complement. \\b, \\B, \\W,
+    \\D, and \\S inside a class have no exact RE2 form and raise.
+
+    The rewrite is exact per character up to the Unicode tables of the
+    two engines and re.IGNORECASE folding (python folds U+0130/U+0131 to
+    'i', RE2 does not); plans/fused.py checks each non-ASCII character
+    it meets and re-runs the affected rows under python re."""
     out = _RE2_CACHE.get(pattern)
     if out is None:
         parts: list[str] = []
@@ -132,17 +139,19 @@ def re2(pattern: str) -> str:
         i = 0
         while i < len(pattern):
             c = pattern[i]
-            if c == "\\" and i + 1 < len(pattern) and pattern[i + 1] in "sS":
-                if pattern[i + 1] == "s":
-                    parts.append(_RE2_S_MEMBERS if in_class
-                                 else f"[{_RE2_S_MEMBERS}]")
-                else:
-                    if in_class:
-                        raise ValueError(
-                            r"\S inside a character class has no RE2 "
-                            "member-list rewrite")
-                    parts.append(f"[^{_RE2_S_MEMBERS}]")
+            nxt = pattern[i + 1] if c == "\\" and i + 1 < len(pattern) else ""
+            if nxt in ("s", "w"):
+                members = _RE2_S_MEMBERS if nxt == "s" else _RE2_W_MEMBERS
+                parts.append(members if in_class else f"[{members}]")
                 i += 2
+            elif nxt == "d":
+                parts.append(r"\p{Nd}")
+                i += 2
+            elif nxt == "S" and not in_class:
+                parts.append(f"[^{_RE2_S_MEMBERS}]")
+                i += 2
+            elif nxt and nxt in "SbBWD":
+                raise ValueError(f"\\{nxt} has no exact RE2 rewrite here")
             elif c == "\\":
                 parts.append(pattern[i:i + 2])
                 i += 2

@@ -1,7 +1,7 @@
 """Streaming enrichment: the full extract -> enrich pipeline as one stream.
 
 The 6-phase enrichment + deterministic estimation (plans/enrichment.py)
-is document-local — one mapInPandas with no shuffle and no cross-doc
+is document-local — one mapInArrow with no shuffle and no cross-doc
 state — so composing it onto the streaming extraction plan yields an
 end-to-end continuous pipeline: new span-table files are extracted,
 validated, normalized, enriched, classified, grouped, and cost-estimated
@@ -11,8 +11,8 @@ src/data_enrichment_pipeline.py:55-107), with checkpointLocation
 supplying the resume guarantee the batch path gets from
 sources/checkpoint.py.
 
-At scale the plan stays map-only end to end (scan -> mapInArrow
-extraction -> mapInPandas enrichment -> sink): no state store, no
+At scale the plan stays map-only end to end (scan -> one mapInArrow
+running extraction and enrichment per batch -> sink): no state store, no
 watermark, no shuffle — throughput is bounded only by executor count,
 and a lagging stream catches up by widening maxFilesPerTrigger.
 """

@@ -188,7 +188,8 @@ def test_spark_matches_python(spark):
                       "standard_severity", "standard_action",
                       "standard_category", "cost_strategy",
                       "is_grouped", "grouped_with", "is_duplicate",
-                      "requires_specialized_labor", "safety_flag"):
+                      "requires_specialized_labor", "safety_flag",
+                      "page_numbers", "estimated_cost"):
                 gv = gi[k]
                 wv = wi.get(k)
                 if k in ("is_grouped", "is_duplicate", "safety_flag",

@@ -162,3 +162,29 @@ def test_adversarial_corpus_matches_oracle(spark, plan_name, seed):
                     f"{doc_id}: metadata {k}"
             else:
                 assert gv == wv, f"{doc_id}: metadata {k}: {gv!r} != {wv!r}"
+
+
+def test_metadata_splice_fuzz_matches_oracle():
+    """20 seeds of the metadata campaign (``tools/fuzz_extraction.py
+    meta``): S1/T7 keyword lines with case-fold, space, digit, mark and
+    NUL characters spliced in, through the fused kernel's RE2 cascades
+    and python-re reroute, equal oracle._extract_metadata (python re)."""
+    import tools.fuzz_extraction as fz
+
+    for seed in range(20):
+        assert fz.meta_divergences(fz.gen_meta_docs(30, seed)) == [], seed
+
+
+def test_re2_unsafe_characters_pinned():
+    """The BMP characters on which some metadata regex atom classifies
+    differently under python re and under rules.re2: python's
+    re.IGNORECASE folds U+0130/U+0131 to 'i' and RE2 does not, and RE2
+    case-folds U+0345 into its \\w class. Documents holding one of them
+    take the python-re tier. (Outside the BMP the two engines' Unicode
+    tables differ on characters assigned after python's Unicode version;
+    the same per-character check routes those.)"""
+    from pdf_extraction_spark.plans.fused import _re2_unsafe
+
+    chars = {chr(c) for c in range(0x80, 0x10000)
+             if not 0xD800 <= c <= 0xDFFF} | {"\x00"}
+    assert _re2_unsafe(chars) == {"İ", "ı", "ͅ"}

@@ -1,5 +1,7 @@
 """rules.jre(): the python-semantics Java-regex compiler (no Spark)."""
 
+import pytest
+
 from pdf_extraction_spark import rules
 
 
@@ -40,7 +42,15 @@ def test_re2_s_rewrite_matches_python_on_ascii():
 
 
 def test_re2_class_member_form_and_cache():
-    assert rules.re2(r"[\s,]") == "[ \\t\\n\\r\\f\\x0b\\x1c-\\x1f,]"
-    assert rules.re2(r"\S") == "[^ \\t\\n\\r\\f\\x0b\\x1c-\\x1f]"
-    assert rules.re2(r"\.\d[]]") == r"\.\d[]]"  # non-\s escapes untouched
+    ws = (r"\t\n\x0b\x0c\r\x1c-\x20\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+          r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}")
+    assert rules.re2(r"[\s,]") == f"[{ws},]"
+    assert rules.re2(r"\S") == f"[^{ws}]"
+    assert rules.re2(r"[\w\s]+") == f"[\\p{{L}}\\p{{N}}_{ws}]+"
+    assert rules.re2(r"\w") == r"[\p{L}\p{N}_]"
+    assert rules.re2(r"\.\d[]]") == r"\.\p{Nd}[]]"  # other escapes untouched
     assert rules.re2("abc") is rules.re2("abc")
+    for bad in (r"\b", r"[\S]", r"\W", r"\D"):
+        with pytest.raises(ValueError):
+            rules.re2(bad)
+

@@ -59,6 +59,79 @@ def test_fused_extraction_zero_shuffle(spark):
     assert "Exchange" not in _plan(df)
 
 
+def _span_docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id string, spans array<struct<"
+                                 "kind:string,text:string,media_ref:string,"
+                                 "offset:int>>")
+
+
+def _corpus_rows(n, **kw):
+    from pdf_extraction_spark import corpus
+
+    pdf = corpus.docs_pandas(n, **kw)
+    return [(d, [dict(s) for s in sp]) for d, sp in zip(pdf.doc_id, pdf.spans)]
+
+
+def test_fused_enrichment_one_arrow_pass(spark):
+    """enrich_extracted(assemble_fused(docs)) is ONE mapInArrow over the
+    docs: extraction and enrichment cross the JVM<->Python boundary once,
+    with no pandas map and no Exchange."""
+    from pdf_extraction_spark.plans.enrichment import enrich_extracted
+    from pdf_extraction_spark.plans.fused import assemble_fused
+
+    docs = _span_docs(spark, _corpus_rows(20))
+    plan = _plan(enrich_extracted(assemble_fused(docs)))
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan and "Exchange" not in plan, plan
+
+
+def test_persisted_extraction_is_read_not_rerun(spark):
+    """A persisted extraction — the same DataFrame, or an equal
+    extraction plan built again — is enriched from the cache: the plan is
+    the enrichment map over InMemoryTableScan, extraction is not re-run."""
+    from pdf_extraction_spark.plans.enrichment import enrich_extracted
+    from pdf_extraction_spark.plans.fused import assemble_fused
+
+    docs = _span_docs(spark, _corpus_rows(20))
+    extracted = assemble_fused(docs).persist()
+    try:
+        for ext in (extracted, assemble_fused(docs)):
+            jplan = enrich_extracted(ext)._jdf.queryExecution() \
+                .executedPlan()
+            names = [n.nodeName() for n in _walk_jvm_plan(jplan)]
+            assert names == ["MapInArrow", "InMemoryTableScan"], names
+    finally:
+        extracted.unpersist()
+
+
+def test_fused_enrichment_equals_generic_path(spark):
+    """The one-pass plan and the generic plan over a persisted extraction
+    give identical rows, on a corpus with a giant doc, a NULL spans
+    array and empty docs."""
+    from pdf_extraction_spark.plans.enrichment import enrich_extracted
+    from pdf_extraction_spark.plans.fused import assemble_fused
+
+    rows = _corpus_rows(12, giant_every=6) + [
+        ("null_spans", None), ("empty", []),
+        ("media_only", [{"kind": "media", "text": "", "media_ref": "m.png",
+                         "offset": 0}])]
+    docs = _span_docs(spark, rows).repartition(3)
+
+    def run(df):
+        return {r["doc_id"]: r.asDict(recursive=True) for r in df.collect()}
+
+    extracted = assemble_fused(docs).persist()
+    try:
+        generic = run(enrich_extracted(extracted))
+    finally:
+        extracted.unpersist()
+    fused_df = enrich_extracted(assemble_fused(docs))
+    assert _plan(fused_df).count("MapInArrow") == 1
+    fused = run(fused_df)
+    assert set(fused) == {d for d, _ in rows}
+    assert fused == generic
+
+
 def test_parquet_scan_prunes_and_pushes(spark):
     """Column pruning + predicate pushdown must reach the parquet scan:
     a 2-column projection that reads all columns is wrong at any scale."""

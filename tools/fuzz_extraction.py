@@ -8,6 +8,12 @@ tables, metadata struct, summary.
 This campaign found the 4th tri-engine regex divergence (RE2's ``\\s``
 missing ``\\x0b``/``\\x1c-\\x1f``); divergent strings get promoted into
 tests/test_extraction_fuzz.py's committed NASTY corpus.
+
+``python tools/fuzz_extraction.py meta LO HI`` runs the metadata campaign
+instead, with no Spark: S1/T7 keyword lines with case-fold, space, digit
+and mark characters spliced into and around them, through the fused
+kernel (``extract_record_batch``: RE2 with the python-re reroute) against
+``oracle._extract_metadata``.
 """
 
 from __future__ import annotations
@@ -18,9 +24,12 @@ import sys
 sys.path.insert(0, __import__("os").path.dirname(
     __import__("os").path.dirname(__import__("os").path.abspath(__file__))))
 
+import pyarrow as pa  # noqa: E402
+
 from pdf_extraction_spark import oracle  # noqa: E402
 from pdf_extraction_spark.plans.extraction import assemble  # noqa: E402
-from pdf_extraction_spark.plans.fused import assemble_fused  # noqa: E402
+from pdf_extraction_spark.plans.fused import (  # noqa: E402
+    assemble_fused, extract_record_batch)
 from pdf_extraction_spark.plans.salted import assemble_salted  # noqa: E402
 from pdf_extraction_spark.session import get_spark  # noqa: E402
 
@@ -102,7 +111,87 @@ PLANS = {
 }
 
 
+# Characters where python re and RE2 can disagree: case-fold specials
+# (dotted/dotless I, long s, Kelvin sign), non-ASCII and ASCII-control
+# spaces, non-ASCII decimal digits, letters, combining marks, NUL.
+META_SPLICE = ["\u0130", "\u0131", "\u017f", "\u212a", "\xa0", "\u3000",
+               "\x85", "\x0b", "\x1c", "\u0663", "\u06f7", "\uff13",
+               "\u00e9", "\u00fe", "\u0301", "\u0345", "\x00"]
+META_LINES = [
+    "Report Number: RPT-{n}", "Inspection Date: August {n}, 2025",
+    "Date: {n}/01/2024", "{n} Main St, Houston, TX 77002",
+    "{n} Oak Ave, Austin, TX 78701", "12 Elm Rd, Reno, NV 89501",
+    "Square Feet: 2,{n}", "{n}45 sq ft", "Living Area: 1,{n}",
+    "Year Built: 19{n}", "built in 19{n}", "circa 18{n}", "{n} story",
+    "Stories: {n}", "two story home", "Property Type: Single Family,",
+    "Style: ranch;", "townhome", "Lot Size: 8,{n} sq ft",
+    "lot: 0.{n} acres", "{n} bedrooms", "Bedrooms: {n}", "2.5 baths",
+    "Bathrooms: {n}", "Location: {n} Kirby Dr, Houston", "Houston, Texas",
+    "Repair Pricer",
+]
+
+
+def splice_line(rng: random.Random) -> str:
+    """One metadata keyword line with splice characters inserted next to
+    (or substituted for) its letters, digits and spaces."""
+    line = rng.choice(META_LINES).format(n=rng.randint(0, 99))
+    out = []
+    for c in line:
+        r = rng.random()
+        if r < 0.06:
+            out.append(rng.choice(META_SPLICE))
+        elif r < 0.12 and (c.isalnum() or c == " "):
+            out.append(rng.choice(META_SPLICE))
+            continue
+        out.append(c)
+    return "".join(out)
+
+
+def gen_meta_docs(n_docs: int, seed: int):
+    """Docs whose first three pages carry spliced metadata lines."""
+    rng = random.Random(seed)
+    docs = []
+    for d in range(n_docs):
+        spans = []
+        for off in sorted(rng.sample(range(3 * oracle.LINES_PER_PAGE),
+                                     rng.randint(1, 24))):
+            text = " ".join(splice_line(rng)
+                            for _ in range(rng.randint(1, 3)))
+            spans.append({"kind": "text", "text": text, "media_ref": "",
+                          "offset": off})
+        docs.append((f"m{seed}_{d:03d}", spans))
+    return docs
+
+
+_SPANS_T = pa.list_(pa.struct([
+    ("kind", pa.string()), ("text", pa.string()),
+    ("media_ref", pa.string()), ("offset", pa.int32())]))
+
+
+def meta_divergences(docs) -> list[str]:
+    """Doc ids whose fused-kernel metadata differs from the oracle's."""
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array([d for d, _ in docs], pa.string()),
+         pa.array([spans for _, spans in docs], _SPANS_T)],
+        names=["doc_id", "spans"])
+    got = extract_record_batch(rb).column("metadata").to_pylist()
+    return [d for (d, spans), g in zip(docs, got)
+            if g != oracle._extract_metadata(spans)]
+
+
+def main_meta(lo: int, hi: int) -> None:
+    bad = 0
+    for seed in range(lo, hi):
+        for doc_id in meta_divergences(gen_meta_docs(30, seed)):
+            bad += 1
+            print(f"seed {seed} doc {doc_id}: METADATA DIVERGENCE")
+    print("DONE divergences:", bad)
+
+
 def main() -> None:
+    if sys.argv[1] == "meta":
+        main_meta(int(sys.argv[2]), int(sys.argv[3]))
+        return
     lo, hi = int(sys.argv[1]), int(sys.argv[2])
     plans = ([sys.argv[3]] if len(sys.argv) > 3 and sys.argv[3] != "all"
              else list(PLANS))
